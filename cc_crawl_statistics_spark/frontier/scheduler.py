@@ -478,29 +478,19 @@ def fetch_extract(sched: DataFrame, docs: DataFrame) -> DataFrame:
 _BLOOM_UDF_CACHE: dict = {}
 
 
-def _cached_prefilter_udf(spark, kind: str, path: str):
-    from .shardedfilter import is_sharded
-
+def _cached_prefilter_udf(spark, path: str):
     key = (spark.sparkContext.applicationId, path)
     if key not in _BLOOM_UDF_CACHE:
-        # sharded filter (the only format — legacy blobs migrate on
-        # touch, store.migrate_prefilter): nothing to load or broadcast
-        # here — the UDF closure carries only the header params, and
-        # executors lazily cache the shard files their batches touch
-        # (mtime-keyed, so a cuckoo-deletion rewrite self-invalidates;
-        # frontier/shardedfilter.py)
-        if not is_sharded(path):
-            raise ValueError(
-                f"legacy single-blob prefilter at {path}; callers must "
-                "go through SnapshotStore.migrate_prefilter"
-            )
+        # nothing to load or broadcast here — the UDF closure carries
+        # only the header params, and executors lazily cache the shard
+        # files their batches touch (frontier/shardedfilter.py)
         from .shardedfilter import might_contain_udf
 
         udf = might_contain_udf(spark, path)
         # evict only stale entries for the SAME store (a new compaction
         # writes a new path under the same root) — clearing everything
-        # would force two interleaved stores (A/B runs, bloom-vs-cuckoo
-        # comparisons) to re-broadcast their gigabyte bit arrays on every
+        # would make two interleaved stores in one process (A/B runs,
+        # the benchmark's copied stores) rebuild their UDFs on every
         # alternating round
         root = os.path.dirname(os.path.dirname(path))
         for k in [
@@ -525,7 +515,6 @@ def run_round(
     bloom_min_seen: int = 10_000_000,
     timings: dict | None = None,
     expand_fn=None,
-    prefilter: str = "bloom",
     age_boost: int = 0,
     n_fetchers: int = 0,
     enforce_robots_paths: bool = False,
@@ -543,11 +532,10 @@ def run_round(
     html/extracted-text columns and records the byte-identity invariant in
     its metrics (n_extract_mismatch must be 0). Every ``compact_every``
     rounds the seen-set deltas are compacted into one base table with a
-    materialized prefilter — ``prefilter="bloom"`` (default) or
-    ``"cuckoo"`` (deletable; frontier/cuckoo.py) — post-commit
-    maintenance: a crash during compaction loses nothing, read_seen falls
-    back to the deltas. Results are bit-identical across prefilter
-    choices (test_compaction_and_bloom_bit_identical).
+    materialized Bloom prefilter — post-commit maintenance: a crash
+    during compaction loses nothing, read_seen falls back to the deltas.
+    Results are bit-identical with and without the prefilter
+    (test_compaction_and_bloom_bit_identical).
 
     ``expand_fn`` overrides link discovery (default: the arithmetic
     ``expand_links`` model). Pass ``html_discovery(spark, sf_dir)`` to
@@ -642,35 +630,15 @@ def run_round(
     # updates it via its own robots-refresh job, committing a new version
     # only when it changes)
     ledger = store.read(spark, 0, "host_ledger")
-    # resume compatibility: stores committed by engine versions that did
-    # not persist the universe table / n_docs metric fall back to
-    # recomputing the corpus state instead of failing the resume contract
-    try:
-        universe = store.read(spark, 0, "universe")
-    except Exception:
-        if pages is None:
-            pages = pages_df(spark, sf_dir)
-        universe = url_universe(pages).localCheckpoint(eager=True)
-    m0 = store.manifest(0)["metrics"]
-    # None-checks, NOT falsy-or: a legitimate 0 (e.g. a drained frontier
-    # after convergence) must not fall through to a corpus-scale recount
-    # every subsequent round
-    n_docs = m0.get("n_docs")
-    if n_docs is None:
-        n_docs = universe.count()
+    universe = store.read(spark, 0, "universe")
+    n_docs = store.manifest(0)["metrics"]["n_docs"]
     mprev = store.manifest(latest)["metrics"]
-    prev_seen = mprev.get("n_seen")
-    if prev_seen is None:
-        prev_seen = seen.count()
+    prev_seen = mprev["n_seen"]
     # pending count carries forward incrementally (retired rows and the
     # appended delta are all exactly counted), like n_seen — the frontier
-    # is never rescanned for a metric; legacy manifests fall back to a
-    # one-time count
-    prev_pending = mprev.get("n_frontier_pending")
-    if prev_pending is None:
-        prev_pending = mprev.get("n_seeded")
-    if prev_pending is None:
-        prev_pending = frontier.count()
+    # is never rescanned for a metric; the seed round records its whole
+    # frontier as n_seeded
+    prev_pending = mprev["n_frontier_pending" if latest else "n_seeded"]
 
     pending = frontier.filter(F.col("state") == "pending")
     gated = pending.join(F.broadcast(ledger), "host")
@@ -682,12 +650,11 @@ def run_round(
     # retired by that round, so the only 403-host pending rows are the
     # ones appended since the last retirement — the latest round's
     # discovery delta, or the materialized base itself when the base IS
-    # the latest round (the seed, a fresh compaction — whose reconstructed
-    # pending already contains that round's delta — or every round of a
-    # legacy full-rewrite store, where the rewrite kept exactly the
-    # last round's new urls on blocked hosts). Bit-identical to filtering
-    # the reconstruction (model test + compaction-identity test, which
-    # exercises the base==latest branch every round).
+    # the latest round (the seed, or a fresh compaction — whose
+    # reconstructed pending already contains that round's delta).
+    # Bit-identical to filtering the reconstruction (model test +
+    # compaction-identity test, which exercises the base==latest branch
+    # every round).
     blocked_hosts = ledger.filter(F.col("robots_status") == 403).select(
         "host"
     )
@@ -789,20 +756,14 @@ def run_round(
         discovered = (expand_fn or expand_links)(
             sched_materialized, universe, n_docs
         )
-        pf = (
-            # migrate-on-touch: a legacy single-blob store is rebuilt
-            # sharded here, the one read seam — so the sharded layout is
-            # an invariant past this line and no whole-filter object is
-            # ever loaded or broadcast anywhere
-            store.migrate_prefilter(spark, latest)
+        pf_path = (
+            store.prefilter_path(latest)
             if prev_seen >= bloom_min_seen
             else None
         )
-        if pf is not None:
-            pf_kind, pf_path = pf
+        if pf_path is not None:
             might = _timed(
-                "bloom_load",
-                lambda: _cached_prefilter_udf(spark, pf_kind, pf_path),
+                "bloom_load", lambda: _cached_prefilter_udf(spark, pf_path)
             )
             base_rnd = store.seen_base_round(latest)
             recent = store.read_seen_deltas(spark, base_rnd + 1, latest)
@@ -951,7 +912,7 @@ def run_round(
         for k, v in getattr(store, "last_commit_timings", {}).items():
             timings[f"c_{k}"] = v
     if compact_every and rnd % compact_every == 0:
-        store.compact_seen(spark, rnd, n_partitions, prefilter=prefilter)
+        store.compact_seen(spark, rnd, n_partitions)
         store.compact_frontier(spark, rnd, n_partitions)
     return out
 
@@ -965,11 +926,11 @@ def reopen_for_recrawl(
 ) -> int:
     """Adaptive-recrawl glue: URLs whose digest history puts them in the
     given refresh tiers (operators/recrawl.py) are re-opened in the seen
-    store — their canonical seen keys are filed via state.reopen_seen
-    (cuckoo prefilter pruned in place), so the next round that
-    re-discovers them schedules a refetch. Returns how many URLs were
-    re-opened. The tier list bounds the volume per invocation (hot «
-    frontier size), keeping the reopen anti-join side broadcastable."""
+    store — their canonical seen keys are filed via state.reopen_seen,
+    so the next round that re-discovers them schedules a refetch.
+    Returns how many URLs were re-opened. The tier list bounds the
+    volume per invocation (hot « frontier size), keeping the reopen
+    anti-join side broadcastable."""
     from ..operators.recrawl import recrawl_tiers
 
     due = (

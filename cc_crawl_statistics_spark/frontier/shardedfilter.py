@@ -1,12 +1,7 @@
-"""Key-range-sharded URL-seen prefilters (Bloom and cuckoo).
+"""Key-range-sharded URL-seen Bloom prefilter.
 
-This is the at-scale replacement for the single-blob filters in
-frontier/bloom.py and frontier/cuckoo.py, which build partition-parallel
-but then OR/assemble the FULL filter on the driver and broadcast it to
-every executor — fine at sandbox scale, ~12.5 GB per object at the
-north-rule 10^10-key frame (SURVEY §7 hard part 6; round-3 verdict
-"What's wrong" #1/#2). Here the filter never exists as one object
-anywhere:
+At the north-rule 10^10-key frame a whole filter is ~12.5 GB (SURVEY §7
+hard part 6), so here the filter never exists as one object anywhere:
 
   * **Build** routes keys to ``n_shards`` independent shards by a
     splitmix64 mix of the 64-bit seen key, repartitions so each shard's
@@ -15,33 +10,26 @@ anywhere:
     directory via tmp+rename. The driver only collects one tiny stats
     row per shard and writes the ``_FILTER.json`` header last — the
     commit point, same protocol as the store's ``_MANIFEST.json``.
-  * **Membership** is the same Arrow-batched pandas UDF contract as the
-    legacy filters, but instead of a broadcast bit array the executor
-    process lazily loads the shard files a batch actually touches, into
-    a process-level cache keyed by (path, mtime) — so a shard rewritten
-    by a cuckoo deletion is picked up automatically, and an executor
-    whose tasks only ever see a key subrange only ever holds those
-    shards (at 10^10 keys: ~12 MiB/shard at 1024 shards, not 12.5 GB).
-  * **Deletion** (cuckoo only) is a Spark job: reopen keys repartition
-    by shard id and each task loads the committed (pre-deletion) shard
-    snapshot, edits it, and writes a job-unique temp sibling; the driver
-    renames the edited shards into place only after the job succeeds —
-    so a retried/speculative task can never double-apply a deletion
-    (delete_keys_sharded). The driver never holds more than the
-    per-shard removed-counts. Max resident set anywhere = one shard.
+  * **Membership** is an Arrow-batched pandas UDF: instead of a
+    broadcast bit array the executor process lazily loads the shard
+    files a batch actually touches, into a bounded process-level cache —
+    so an executor whose tasks only ever see a key subrange only ever
+    holds those shards (at 10^10 keys: ~12 MiB/shard at 1024 shards, not
+    12.5 GB).
 
-Both kinds share the routing and the wire layout::
+Wire layout::
 
     <dir>/
-      _FILTER.json            # kind + params, written last (commit point)
-      shard=00000.npy ...     # one packed numpy array per non-empty shard
+      _FILTER.json            # params, written last (commit point)
+      shard=00000.npy ...     # one packed bit array per non-empty shard
 
 A missing shard file means "no keys routed there" → definitely-absent,
-which keeps the no-false-negative contract exact. Correctness contract is
-unchanged from the legacy filters: the exact seen anti-join stays the
-source of truth, the prefilter only short-circuits definitely-absent keys
-(bit-identity pinned in tests/test_frontier.py and
-tests/test_sharded_filter.py).
+which keeps the no-false-negative contract exact. The exact seen
+anti-join stays the source of truth, the prefilter only short-circuits
+definitely-absent keys (bit-identity pinned in tests/test_frontier.py and
+tests/test_sharded_filter.py). The filter is never edited in place:
+keys re-opened for recrawl leave the exact seen set (state.reopen_seen)
+and stay "maybe" here until the next compaction rebuilds the filter.
 
 Reference frame: the reference repo has no frontier (crawlstats.py is a
 counting job); this implements SURVEY §7's partitioned URL-seen design.
@@ -59,20 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .bloom import _indices, _mix
-from .cuckoo import (
-    _C3,  # the one routing-mix constant, shared with the cuckoo tables
-    SLOTS,
-    _alt_bucket,
-    _bucket1,
-    _fingerprint,
-    _insert_keys,
-)
+from .bloom import _C3, _indices, _mix
 
 HEADER = "_FILTER.json"
 
 # Per-executor-process shard cache: (file path, mtime_ns) -> ndarray.
-# mtime in the key makes a cuckoo-deletion rewrite self-invalidating.
+# mtime in the key makes a rebuilt shard self-invalidating: a compaction
+# re-run after a crash rebuilds the same directory, so the path alone
+# would serve the old epoch's bits.
 # Bounded via SPARK_GRAFT_SHARD_CACHE (entries; default 8 — at the
 # 64 MiB shard-sizing target that caps a long-lived executor at ~512 MiB
 # resident even when its tasks touch many shards over the process
@@ -84,14 +66,14 @@ _SHARD_CACHE_DEFAULT = 8
 
 
 def _route(keys: np.ndarray, n_shards: int) -> np.ndarray:
-    """Shard id per key — one definition shared by build/lookup/delete."""
+    """Shard id per key — one definition shared by build and lookup."""
     u = keys.astype(np.int64).view(np.uint64)
     return (_mix(u, _C3) % np.uint64(n_shards)).astype(np.int64)
 
 
 def _padded_per_shard(n_keys: int, n_shards: int) -> int:
     """Upper bound on keys routed to one shard: Binomial(n, 1/n_shards)
-    mean + 6σ + slack (same variance argument as cuckoo._n_buckets_for)."""
+    mean + 6σ + slack, so the busiest shards are not sized off the mean."""
     mean = max(1, (n_keys + n_shards - 1) // n_shards)
     return mean + int(math.ceil(6 * math.sqrt(mean))) + 16
 
@@ -123,15 +105,6 @@ def _fresh_dir(dir_: str) -> None:
 def is_committed(dir_: str) -> bool:
     """A sharded filter exists only once its header does (written last)."""
     return os.path.exists(os.path.join(dir_, HEADER))
-
-
-def is_sharded(path: str) -> bool:
-    """Format predicate for a ``prefilter_path`` result — THE one place
-    that knows sharded filters live in directories and legacy blobs in
-    .npy files. Every consumer (scheduler UDF seam, shard-clustering
-    block, reopen deletion) dispatches through this instead of sniffing
-    the filesystem itself, so a future format change is one edit."""
-    return os.path.isdir(path)
 
 
 def _atomic_save(path: str, arr: np.ndarray) -> None:
@@ -223,69 +196,6 @@ def build_sharded_bloom(
     return header
 
 
-def build_sharded_cuckoo(
-    seen: DataFrame,
-    out_dir: str,
-    key_col: str = "seen_key",
-    n_shards: int | None = None,
-    load_target: float = 0.8,
-) -> dict:
-    """Sharded deletable cuckoo filter: one partial-key cuckoo table per
-    shard (16-bit fingerprints, 4 slots/bucket — frontier/cuckoo.py's
-    table layout), each built and written by the task that owns the
-    shard's keys."""
-    n_keys = seen.count()
-    if n_shards is None:
-        # cuckoo spends 16 bits/key at SLOTS×buckets/load — size shards
-        # off that footprint so a shard file stays cache-friendly
-        n_shards = default_n_shards(n_keys, bits_per_key=20)
-    per_shard = _padded_per_shard(n_keys, n_shards)
-    need = max(1, int(math.ceil(per_shard / (SLOTS * load_target))))
-    n_buckets = 1 << int(math.ceil(math.log2(need)))
-    _fresh_dir(out_dir)
-
-    route_udf = shard_route_udf(n_shards)
-    routed = seen.select(F.col(key_col).alias("k")).withColumn(
-        "_shard", route_udf(F.col("k"))
-    )
-
-    def per_partition(batches):
-        tables: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for shard, grp in pdf.groupby("_shard"):
-                if int(shard) not in tables:
-                    tables[int(shard)] = (
-                        np.zeros((n_buckets, SLOTS), dtype=np.uint16),
-                        np.zeros(n_buckets, dtype=np.int64),
-                    )
-                table, fill = tables[int(shard)]
-                u = grp["k"].to_numpy(dtype=np.int64).view(np.uint64)
-                _insert_keys(table, fill, u, n_buckets)
-        for shard, (table, _) in tables.items():
-            _atomic_save(_shard_file(out_dir, shard), table)
-        if tables:
-            yield pd.DataFrame({"shard": list(tables)})
-
-    stats = (
-        routed.repartition(n_shards, "_shard")
-        .mapInPandas(per_partition, "shard long")
-        .collect()
-    )
-    header = {
-        "kind": "cuckoo",
-        "n_shards": n_shards,
-        "n_keys": n_keys,
-        "n_buckets": n_buckets,
-        "slots": SLOTS,
-        "shard_bytes": n_buckets * SLOTS * 2,
-        "nonempty_shards": len(stats),
-    }
-    _write_header(out_dir, header)
-    return header
-
-
 def _load_shard(dir_: str, shard: int) -> np.ndarray | None:
     """Load one shard array through the process cache (mtime-keyed, so a
     rewritten shard self-invalidates). None = empty shard (no file)."""
@@ -319,17 +229,6 @@ def _bloom_hits(bits: np.ndarray, keys: np.ndarray, m: int, k: int
     return hit.all(axis=1)
 
 
-def _cuckoo_hits(table: np.ndarray, keys: np.ndarray, n_buckets: int
-                 ) -> np.ndarray:
-    u = keys.astype(np.int64).view(np.uint64)
-    fps = _fingerprint(u)
-    b1 = _bucket1(u, n_buckets)
-    b2 = _alt_bucket(b1, fps, n_buckets)
-    hit1 = (table[b1] == fps[:, None]).any(axis=1)
-    hit2 = (table[b2] == fps[:, None]).any(axis=1)
-    return hit1 | hit2
-
-
 def contains_shards(dir_: str, keys: np.ndarray) -> np.ndarray:
     """Driver/test-side membership over a sharded filter, one shard
     resident at a time (True = maybe present)."""
@@ -342,16 +241,13 @@ def contains_shards(dir_: str, keys: np.ndarray) -> np.ndarray:
         if arr is None:
             continue
         msk = shard == s
-        if h["kind"] == "bloom":
-            out[msk] = _bloom_hits(arr, keys[msk], h["m"], h["k"])
-        else:
-            out[msk] = _cuckoo_hits(arr, keys[msk], h["n_buckets"])
+        out[msk] = _bloom_hits(arr, keys[msk], h["m"], h["k"])
     return out
 
 
 def shard_route_udf(n_shards: int):
     """Arrow-batched shard-id column for a seen-key column — the same
-    routing mix the filters use. The scheduler clusters prefilter
+    routing mix the filter uses. The scheduler clusters prefilter
     candidates by this before the membership UDF, so each task (and so
     each executor's shard cache) touches ~one shard instead of all of
     them — the difference between ~64 MiB and the full filter footprint
@@ -363,15 +259,12 @@ def shard_route_udf(n_shards: int):
 
 
 def might_contain_udf(spark: SparkSession, dir_: str):
-    """Arrow-batched membership test over a sharded filter directory —
-    signature-identical to bloom/cuckoo.might_contain_udf, so the
-    scheduler's size-gated prefilter seam accepts any of the three. No
-    broadcast: each executor process lazily caches only the shard files
-    its batches touch (the whole point at 10^10 keys)."""
+    """Arrow-batched membership test over a sharded filter directory
+    (True = maybe present). No broadcast: each executor process lazily
+    caches only the shard files its batches touch (the whole point at
+    10^10 keys)."""
     h = load_header(dir_)
-    kind, n_shards = h["kind"], h["n_shards"]
-    m, k = h.get("m"), h.get("k")
-    n_buckets = h.get("n_buckets")
+    n_shards, m, k = h["n_shards"], h["m"], h["k"]
 
     @pandas_udf("boolean")
     def _might(keys: pd.Series) -> pd.Series:
@@ -385,150 +278,7 @@ def might_contain_udf(spark: SparkSession, dir_: str):
             if bits is None:
                 continue
             msk = shard == s
-            if kind == "bloom":
-                out[msk] = _bloom_hits(bits, arr[msk], m, k)
-            else:
-                out[msk] = _cuckoo_hits(bits, arr[msk], n_buckets)
+            out[msk] = _bloom_hits(bits, arr[msk], m, k)
         return pd.Series(out)
 
     return _might
-
-
-def _delete_from_table(
-    table: np.ndarray, u: np.ndarray, n_buckets: int
-) -> int:
-    """Vectorized cuckoo deletion kernel: clear one stored fingerprint
-    per key (bucket b1 first, else the alt bucket), in place. Returns how
-    many keys were found.
-
-    Bit-identical to the per-key reference loop it replaces: a key whose
-    two candidate (bucket, fingerprint) pairs are shared by NO other key
-    in the batch commutes with every other deletion (clearing a slot only
-    affects matches of the SAME fingerprint in the SAME bucket, and
-    fingerprints are nonzero so a cleared slot never re-matches) — those
-    keys clear via pure array ops against one table snapshot. Only the
-    rare keys that share a candidate pair (duplicate reopen keys or
-    fingerprint collisions) take the ordered sequential path."""
-    fps = _fingerprint(u)
-    b1 = _bucket1(u, n_buckets)
-    b2 = _alt_bucket(b1, fps, n_buckets)
-    # pack each candidate pair into one uint64; a key is safe iff every
-    # pack it contributes is contributed by no other key (own = 2 when
-    # b1 == b2: the key then counts twice toward its single pack)
-    p1 = (b1.astype(np.uint64) << np.uint64(16)) | fps.astype(np.uint64)
-    p2 = (b2.astype(np.uint64) << np.uint64(16)) | fps.astype(np.uint64)
-    uniq, counts = np.unique(np.concatenate([p1, p2]), return_counts=True)
-    own = 1 + (p1 == p2)
-    safe = (counts[np.searchsorted(uniq, p1)] == own) & (
-        counts[np.searchsorted(uniq, p2)] == own
-    )
-    removed = 0
-    s = np.flatnonzero(safe)
-    if s.size:
-        m1 = table[b1[s]] == fps[s][:, None]
-        has1 = m1.any(axis=1)
-        hit1 = s[has1]
-        table[b1[hit1], m1.argmax(axis=1)[has1]] = 0
-        removed += int(has1.sum())
-        r = s[~has1]
-        if r.size:
-            m2 = table[b2[r]] == fps[r][:, None]
-            has2 = m2.any(axis=1)
-            hit2 = r[has2]
-            table[b2[hit2], m2.argmax(axis=1)[has2]] = 0
-            removed += int(has2.sum())
-    for i in np.flatnonzero(~safe):
-        for b in (b1[i], b2[i]):
-            slots = np.flatnonzero(table[b] == fps[i])
-            if slots.size:
-                table[b, slots[0]] = 0
-                removed += 1
-                break
-    return removed
-
-
-def delete_keys_sharded(
-    spark: SparkSession, dir_: str, keys: DataFrame,
-    key_col: str = "seen_key",
-) -> int:
-    """Shard-local cuckoo deletion as a Spark job: reopen keys
-    repartition by shard id and each task edits only the shard files it
-    owns. The driver sees per-shard removed counts only — an unbounded
-    robots-drift reopen never assembles anywhere. Returns total keys
-    removed.
-
-    Two-phase commit for retry/speculation safety: tasks never touch the
-    committed ``shard=NNNNN.npy`` files. Each task reads the committed
-    (pre-deletion) snapshot, applies its deletions, and writes the result
-    to a job-unique ``shard=NNNNN.npy.del-<token>`` sibling; the DRIVER
-    renames the edited shards into place only after the whole job
-    succeeds (the same commit-last protocol as the build's header write).
-    A retried or speculative task therefore always re-reads the
-    pre-deletion snapshot and overwrites its own temp file with identical
-    bytes — re-running a deletion can never double-apply and evict a
-    colliding sibling's fingerprint (which would break the prefilter's
-    no-false-negative contract)."""
-    import uuid
-
-    h = load_header(dir_)
-    if h["kind"] != "cuckoo":
-        raise ValueError("only cuckoo shards support deletion")
-    n_shards, n_buckets = h["n_shards"], h["n_buckets"]
-    token = uuid.uuid4().hex[:12]
-    # stray .del-* files can only come from a crashed earlier job (its
-    # driver never committed them, so they are invisible to readers —
-    # _shard_file names are exact); sweep them before starting
-    for name in os.listdir(dir_):
-        if ".npy.del-" in name:
-            os.remove(os.path.join(dir_, name))
-
-    route_udf = shard_route_udf(n_shards)
-    routed = keys.select(F.col(key_col).alias("k")).withColumn(
-        "_shard", route_udf(F.col("k"))
-    )
-
-    def per_partition(batches):
-        per_shard: dict[int, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for shard, grp in pdf.groupby("_shard"):
-                per_shard.setdefault(int(shard), []).append(
-                    grp["k"].to_numpy(dtype=np.int64)
-                )
-        removed: dict[int, int] = {}
-        edited: dict[int, str] = {}
-        for shard, chunks in per_shard.items():
-            path = _shard_file(dir_, shard)
-            if not os.path.exists(path):
-                removed[shard] = 0
-                continue
-            with open(path, "rb") as f:
-                table = np.load(f).copy()
-            u = np.concatenate(chunks).view(np.uint64)
-            removed[shard] = _delete_from_table(table, u, n_buckets)
-            del_path = f"{path}.del-{token}"
-            _atomic_save(del_path, table)
-            edited[shard] = os.path.basename(del_path)
-        if removed:
-            yield pd.DataFrame(
-                {
-                    "shard": list(removed),
-                    "removed": list(removed.values()),
-                    "edited": [edited.get(s) for s in removed],
-                }
-            )
-
-    stats = (
-        routed.repartition(min(n_shards, 32), "_shard")
-        .mapInPandas(per_partition, "shard long, removed long, edited string")
-        .collect()
-    )
-    # commit point: the job succeeded, rename edited shards into place
-    # (bounded metadata ops, ≤ touched-shard count)
-    for r in stats:
-        if r.edited is not None:
-            os.replace(
-                os.path.join(dir_, r.edited), _shard_file(dir_, int(r.shard))
-            )
-    return int(sum(r.removed for r in stats))

@@ -14,6 +14,11 @@ snapshot gives. Resume = open the highest round with a manifest; a crashed
 round leaves no manifest and is ignored, so re-running it is idempotent
 (north_rule: resumable from checkpoint with per-partition lineage+metrics).
 
+There is one store format. Every manifest carries ``format_version``
+(``FORMAT_VERSION``) at its top level, and opening a store whose round-0
+manifest names another version (or none) fails loudly: the engine reads
+no other layout, so such a store must be re-seeded.
+
 Scale notes:
   - the frontier is written ``repartitionByRange(N, "surt_key")`` so each
     partition owns a contiguous SURT range — the next round's scan is
@@ -28,9 +33,10 @@ Scale notes:
     every K rounds, bounding the file/listing count read_seen unions (at
     thousands of rounds an uncompacted store is a file-listing problem,
     ~64 bits/key ≈ 80 GiB at 10^10 URLs) and materializes the Bloom
-    prefilter (frontier/bloom.py) the anti-join consults: candidates the
-    Bloom rejects as definitely-unseen skip the exact anti-join shuffle;
-    "maybe seen" rows still go through it, so results stay exact.
+    sharded Bloom prefilter (frontier/shardedfilter.py) the anti-join
+    consults: candidates the Bloom rejects as definitely-unseen skip the
+    exact anti-join shuffle; "maybe seen" rows still go through it, so
+    results stay exact.
 """
 
 from __future__ import annotations
@@ -42,12 +48,24 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_MANIFEST.json"
+FORMAT_VERSION = 1
+PREFILTER = "url_seen_bloom.d"
 
 
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        m0 = os.path.join(self._round_dir(0), MANIFEST)
+        if os.path.exists(m0):
+            with open(m0) as f:
+                found = json.load(f).get("format_version")
+            if found != FORMAT_VERSION:
+                raise ValueError(
+                    f"snapshot store {root} has format_version {found!r}, "
+                    f"this engine reads only {FORMAT_VERSION}; re-seed the "
+                    "store (run_round on an empty root)"
+                )
         # Per-table-kind schema cache: every spark.read.parquet without an
         # explicit schema pays a driver-side footer read for inference.
         # A round reads 6-7 store tables, so at steady state those footer
@@ -162,33 +180,15 @@ class SnapshotStore:
         """Re-open previously-seen URLs for refetch (adaptive recrawl,
         operators/recrawl.py decides which): file a bounded reopen list
         under ``rnd``. read_seen subtracts these keys until a later delta
-        re-adds them; a materialized cuckoo prefilter drops them in place
-        (frontier/cuckoo.py — the reason it exists); a Bloom needs no
-        change (it only over-approximates, and the exact anti-join
-        consults the reopen-adjusted seen set — the scheduler's running
-        broadcast may stay stale until the next compaction, which only
-        costs those keys the maybe-path, never correctness). The next
-        discovery of a reopened URL schedules it again."""
+        re-adds them. The Bloom prefilter needs no change: it only
+        over-approximates, so a reopened key takes the maybe-path until
+        the next compaction rebuilds the filter, and the exact anti-join
+        there consults the reopen-adjusted seen set. The next discovery
+        of a reopened URL schedules it again."""
         out = os.path.join(self._round_dir(rnd), "url_seen_reopen")
         keys.select("seen_key").coalesce(1).write.mode("overwrite").parquet(
             out
         )
-        pf = self.prefilter_path(rnd)
-        if pf is not None and pf[0] == "cuckoo":
-            from .shardedfilter import delete_keys_sharded, is_sharded
-
-            if not is_sharded(pf[1]):
-                # legacy single-blob store (pre-sharding rounds):
-                # migrate-on-touch — rebuild it sharded from the base
-                # parquet, so the driver-side load/delete/save (and its
-                # unbounded keys.collect()) never runs
-                pf = self.migrate_prefilter(spark, rnd)
-            # deletion is a Spark job that edits only the affected shard
-            # files (two-phase: tasks write temp siblings, the driver
-            # renames after success) — the reopen list never assembles on
-            # the driver, so an unbounded robots-drift reopen stays
-            # executor-bounded (frontier/shardedfilter.py)
-            delete_keys_sharded(spark, pf[1], keys)
 
     def read_seen_deltas(
         self, spark: SparkSession, from_rnd: int, upto_rnd: int
@@ -207,8 +207,7 @@ class SnapshotStore:
 
     def frontier_base_round(self, upto_rnd: int) -> int | None:
         """Highest round ≤ upto_rnd holding a materialized full frontier
-        (the seed round, a compaction rewrite, or any round committed by
-        the pre-delta engine format)."""
+        (the seed round or a compaction rewrite)."""
         for r in range(upto_rnd, -1, -1):
             if os.path.exists(os.path.join(self._round_dir(r), "frontier")):
                 return r
@@ -320,13 +319,10 @@ class SnapshotStore:
         upto_rnd: int,
         n_partitions: int = 4,
         bloom_bits_per_key: int = 10,
-        prefilter: str = "bloom",
     ) -> None:
         """Merge base + deltas up to ``upto_rnd`` into a single
         hash-partitioned ``url_seen_base`` under that round's directory,
-        and materialize the chosen prefilter beside it — ``"bloom"``
-        (default, smallest) or ``"cuckoo"`` (deletable: recrawl re-opens
-        can remove keys in place, frontier/cuckoo.py). Idempotent: safe to
+        and materialize the Bloom prefilter beside it. Idempotent: safe to
         re-run after a crash (tmp + rename into place); read_seen prefers
         the newest base, so an interrupted compaction never loses keys —
         the old deltas remain until the new base is in place."""
@@ -337,25 +333,17 @@ class SnapshotStore:
         seen.repartition(n_partitions, "seen_key").write.mode(
             "overwrite"
         ).parquet(tmp)
-        # prefilters are SHARDED (frontier/shardedfilter.py): each Spark
+        # the prefilter is SHARDED (frontier/shardedfilter.py): each Spark
         # task builds and writes its own key-range shard file; the filter
         # never exists as one driver/broadcast object (the 10^10-key
         # frame makes a single blob ~12.5 GB — SURVEY §7 hard part 6)
-        if prefilter == "cuckoo":
-            from .shardedfilter import build_sharded_cuckoo
+        from .shardedfilter import build_sharded_bloom
 
-            build_sharded_cuckoo(
-                spark.read.parquet(tmp),
-                os.path.join(rdir, "url_seen_cuckoo.d"),
-            )
-        else:
-            from .shardedfilter import build_sharded_bloom
-
-            build_sharded_bloom(
-                spark.read.parquet(tmp),
-                os.path.join(rdir, "url_seen_bloom.d"),
-                bits_per_key=bloom_bits_per_key,
-            )
+        build_sharded_bloom(
+            spark.read.parquet(tmp),
+            os.path.join(rdir, PREFILTER),
+            bits_per_key=bloom_bits_per_key,
+        )
         if os.path.exists(final):
             shutil.rmtree(final)
         os.replace(tmp, final)
@@ -370,14 +358,9 @@ class SnapshotStore:
         "url_seen_reopen",
         "schedule",
         "blocked",
+        PREFILTER,
     )
     _OUTPUT_TABLES = ("round_stats", "fetched")
-    _PREFILTER_FILES = (
-        "url_seen_bloom.npy",
-        "url_seen_cuckoo.npy",
-        "url_seen_bloom.d",
-        "url_seen_cuckoo.d",
-    )
 
     def expire_rounds(
         self, upto_rnd: int, include_outputs: bool = False
@@ -420,110 +403,19 @@ class SnapshotStore:
                 if os.path.exists(p):
                     shutil.rmtree(p)
                     removed.append(p)
-            for fname in self._PREFILTER_FILES:
-                p = os.path.join(rdir, fname)
-                if os.path.isdir(p):
-                    shutil.rmtree(p)
-                    removed.append(p)
-                elif os.path.exists(p):
-                    os.remove(p)
-                    removed.append(p)
         return removed
 
-    def bloom_path(self, upto_rnd: int) -> str | None:
-        """Path of the newest materialized Bloom filter ≤ upto_rnd —
-        the sharded directory (current format) or the legacy .npy blob."""
+    def prefilter_path(self, upto_rnd: int) -> str | None:
+        """Directory of the newest committed Bloom prefilter ≤ upto_rnd
+        (frontier/shardedfilter.py), or None before the first
+        compaction."""
         base = self.seen_base_round(upto_rnd)
         if base is None:
             return None
-        for fname in ("url_seen_bloom.d", "url_seen_bloom.npy"):
-            p = os.path.join(self._round_dir(base), fname)
-            if os.path.isdir(p):
-                from .shardedfilter import is_committed
+        from .shardedfilter import is_committed
 
-                if is_committed(p):
-                    return p
-            elif os.path.exists(p):
-                return p
-        return None
-
-    def prefilter_path(self, upto_rnd: int) -> tuple[str, str] | None:
-        """(kind, path) of the newest materialized seen-set prefilter ≤
-        upto_rnd — whichever of cuckoo/bloom the compaction wrote. A
-        directory path is the sharded format (frontier/shardedfilter.py);
-        a .npy file is a legacy pre-sharding store, which the engine no
-        longer reads — it is rebuilt sharded at its next touch
-        (migrate_prefilter)."""
-        base = self.seen_base_round(upto_rnd)
-        if base is None:
-            return None
-        rdir = self._round_dir(base)
-        for kind, fname in (
-            ("cuckoo", "url_seen_cuckoo.d"),
-            ("bloom", "url_seen_bloom.d"),
-            ("cuckoo", "url_seen_cuckoo.npy"),
-            ("bloom", "url_seen_bloom.npy"),
-        ):
-            p = os.path.join(rdir, fname)
-            if os.path.isdir(p):
-                from .shardedfilter import is_committed
-
-                if is_committed(p):
-                    return kind, p
-            elif os.path.exists(p):
-                return kind, p
-        return None
-
-    def migrate_prefilter(
-        self, spark: SparkSession, upto_rnd: int
-    ) -> tuple[str, str] | None:
-        """Migrate-on-touch for pre-sharding stores: if the newest
-        prefilter ≤ ``upto_rnd`` is a legacy single-blob ``.npy``,
-        rebuild it as a SHARDED filter from the same base round's
-        ``url_seen_base`` parquet, remove the blob, and return the new
-        (kind, dir). Already-sharded stores return unchanged, so callers
-        use this as their prefilter_path (the scheduler's UDF seam and
-        reopen deletion both do) — after which no code path anywhere
-        loads, assembles, or broadcasts a whole filter.
-
-        Crash-safe by the same header-last protocol as the build: if the
-        rebuild commits but the blob removal doesn't, prefilter_path
-        already prefers the sharded dir and the next touch sweeps the
-        dead blob. Rebuilding from the base parquet is conservative for a
-        legacy cuckoo that had deletions applied: reopened keys re-enter
-        the prefilter as "maybe seen", take the exact anti-join path, and
-        come out correctly unseen — the no-false-negative contract is
-        what migration must (and does) preserve."""
-        pf = self.prefilter_path(upto_rnd)
-        if pf is None:
-            return None
-        kind, path = pf
-        from .shardedfilter import (
-            build_sharded_bloom,
-            build_sharded_cuckoo,
-            is_sharded,
-        )
-
-        base = self.seen_base_round(upto_rnd)
-        rdir = self._round_dir(base)
-        if not is_sharded(path):
-            seen = self._read_parquet(
-                spark,
-                "url_seen_delta",
-                os.path.join(rdir, "url_seen_base"),
-            )
-            out = os.path.join(rdir, f"url_seen_{kind}.d")
-            build = (
-                build_sharded_cuckoo if kind == "cuckoo"
-                else build_sharded_bloom
-            )
-            build(seen, out)
-            path = out
-        for name in ("url_seen_cuckoo.npy", "url_seen_bloom.npy"):
-            p = os.path.join(rdir, name)
-            if os.path.exists(p):
-                os.remove(p)
-        return kind, path
+        p = os.path.join(self._round_dir(base), PREFILTER)
+        return p if is_committed(p) else None
 
     def manifest(self, rnd: int) -> dict:
         with open(os.path.join(self._round_dir(rnd), MANIFEST)) as f:
@@ -649,7 +541,12 @@ class SnapshotStore:
         tmp = os.path.join(rdir, MANIFEST + ".tmp")
         with open(tmp, "w") as f:
             json.dump(
-                {"round": rnd, "metrics": metrics, "partition_lineage": lineage},
+                {
+                    "format_version": FORMAT_VERSION,
+                    "round": rnd,
+                    "metrics": metrics,
+                    "partition_lineage": lineage,
+                },
                 f,
                 indent=1,
                 sort_keys=True,

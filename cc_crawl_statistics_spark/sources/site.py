@@ -111,14 +111,12 @@ def build_site(
         # percent-of-crawl tables (plot/table.py): page counts per
         # (crawl, dim) — aggregated in Spark, pivoted in Spark, only the
         # crawls-wide result reaches the driver
-        is_page = (F.col("status") == 200) & (
-            ~F.col("warc_filename").rlike("/robotstxt/")
-        )
+        from ..operators.counts import page_rows
         from .presentation import percentage_pivot
 
         for name, expr in PERCENTAGE_TABLES.items():
             counts = (
-                src.filter(is_page)
+                page_rows(src)
                 .groupBy("crawl", F.expr(expr).alias(name))
                 .agg(F.count("*").alias("pages"))
             )

@@ -171,7 +171,6 @@ def test_compaction_and_bloom_bit_identical(spark, tmp_path):
 
     a = SnapshotStore(str(tmp_path / "plain"))
     b = SnapshotStore(str(tmp_path / "compacted"))
-    c = SnapshotStore(str(tmp_path / "cuckoo"))
     for rnd in range(1, 4):
         scheduler.run_round(spark, a, SF_SMOKE, compact_every=0)
         # bloom_min_seen=0 forces the prefilter path at fixture scale
@@ -179,35 +178,29 @@ def test_compaction_and_bloom_bit_identical(spark, tmp_path):
         scheduler.run_round(
             spark, b, SF_SMOKE, compact_every=1, bloom_min_seen=0
         )
-        scheduler.run_round(
-            spark, c, SF_SMOKE, compact_every=1, bloom_min_seen=0,
-            prefilter="cuckoo",
-        )
         assert schedule_rows(spark, a, rnd) == schedule_rows(spark, b, rnd)
-        assert schedule_rows(spark, a, rnd) == schedule_rows(spark, c, rnd)
     assert b.seen_base_round(3) == 3
-    assert b.bloom_path(3) is not None
-    assert b.prefilter_path(3)[0] == "bloom"
-    assert c.prefilter_path(3)[0] == "cuckoo"
+    assert b.prefilter_path(3) == os.path.join(
+        b.root, "round=0003", "url_seen_bloom.d"
+    )
     assert os.path.exists(os.path.join(b.root, "round=0002", "url_seen_base"))
     seen_a = {r.seen_key for r in a.read_seen(spark, 3).collect()}
     seen_b = {r.seen_key for r in b.read_seen(spark, 3).collect()}
-    seen_c = {r.seen_key for r in c.read_seen(spark, 3).collect()}
-    assert seen_a == seen_b == seen_c
+    assert seen_a == seen_b
 
 
 def test_reopen_seen_for_recrawl(spark, tmp_path):
     """reopen_seen subtracts re-opened keys from the seen set (until a
-    later delta re-adds them) and drops them from a materialized cuckoo
-    prefilter shard-locally — the recrawl re-open path."""
+    later delta re-adds them) and leaves the materialized Bloom untouched:
+    every base key, reopened or not, stays "maybe present" — the recrawl
+    re-open path."""
     from cc_crawl_statistics_spark.frontier.shardedfilter import (
         contains_shards,
     )
 
     store = SnapshotStore(str(tmp_path / "s"))
     scheduler.run_round(
-        spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0,
-        prefilter="cuckoo",
+        spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0
     )
     scheduler.run_round(spark, store, SF_SMOKE, compact_every=0)
     base_keys = sorted(
@@ -221,17 +214,12 @@ def test_reopen_seen_for_recrawl(spark, tmp_path):
     )
     seen_after = {r.seen_key for r in store.read_seen(spark, 2).collect()}
     assert seen_after == seen_before - set(victims)
-    # cuckoo prefilter dropped the keys in place (bloom would stay stale
-    # but correct; the cuckoo makes the reopened keys take the clean path)
+    # the Bloom is never edited: reopened keys stay "maybe" and take the
+    # exact anti-join, which consults the reopen-adjusted seen set
     import numpy as np
 
-    kind, path = store.prefilter_path(2)
-    assert kind == "cuckoo"
-    assert not contains_shards(path, np.array(victims, dtype=np.int64)).any()
-    remaining = np.array(
-        [k for k in base_keys if k not in victims], dtype=np.int64
-    )
-    assert contains_shards(path, remaining).all()
+    path = store.prefilter_path(2)
+    assert contains_shards(path, np.array(base_keys, dtype=np.int64)).all()
     # a later delta re-adding a reopened key wins over the reopen
     import os as _os
 
@@ -259,8 +247,7 @@ def test_reopen_for_recrawl_glue(spark, tmp_path):
 
     store = SnapshotStore(str(tmp_path / "s"))
     scheduler.run_round(
-        spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0,
-        prefilter="cuckoo",
+        spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0
     )
     pages = pages_df(spark, SF_SMOKE)
     before = {r.seen_key for r in store.read_seen(spark, 1).collect()}
@@ -279,86 +266,101 @@ def test_reopen_for_recrawl_glue(spark, tmp_path):
     assert len(after) < len(before)
 
 
-def test_legacy_blob_prefilter_migrates_on_touch(spark, tmp_path):
-    """A pre-sharding store (single-blob ``url_seen_*.npy`` prefilter) is
-    rebuilt as a SHARDED filter from its base parquet the first time the
-    engine touches it — via migrate_prefilter at the scheduler's UDF seam
-    and inside reopen_seen — and the blob is removed, so the retired
-    driver-merge format can never reach an executor. The rebuilt filter
-    keeps the no-false-negative contract over the base keys."""
+def test_reopen_under_bloom_prefilter_bit_identical(spark, tmp_path):
+    """No false negatives after a reopen: keys re-opened after a
+    compaction stay set in the Bloom, so the round that rediscovers them
+    sends them down the prefilter's maybe-path. That round must produce
+    the same schedule and discovery delta as the plain anti-join
+    (bloom_min_seen above any seen-set size), and the delta must
+    re-admit every reopened URL."""
     import numpy as np
 
     from cc_crawl_statistics_spark.frontier.shardedfilter import (
         contains_shards,
-        is_sharded,
     )
 
-    store = SnapshotStore(str(tmp_path / "s"))
-    scheduler.run_round(
-        spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0,
-        prefilter="cuckoo",
+    seeded = SnapshotStore(str(tmp_path / "seeded"))
+    for _ in range(2):
+        scheduler.run_round(
+            spark, seeded, SF_SMOKE, compact_every=1, bloom_min_seen=0
+        )
+    # which already-seen URLs does round 3 rediscover? Reopening does not
+    # change round 3's schedule, so a throwaway run answers it.
+    shutil.copytree(seeded.root, str(tmp_path / "probe"))
+    probe = SnapshotStore(str(tmp_path / "probe"))
+    scheduler.run_round(spark, probe, SF_SMOKE, compact_every=0)
+    m0 = probe.manifest(0)["metrics"]
+    rediscovered = (
+        scheduler.expand_links(
+            probe.read(spark, 3, "schedule"),
+            probe.read(spark, 0, "universe"),
+            m0["n_docs"],
+        )
+        .select("url", scheduler.seen_key(F.col("url")).alias("seen_key"))
+        .join(probe.read_seen(spark, 2), "seen_key", "left_semi")
+        .distinct()
+        .toPandas()
     )
-    kind, path = store.prefilter_path(1)
-    assert kind == "cuckoo" and is_sharded(path)
-    rdir = os.path.dirname(path)
-    # simulate the legacy layout: drop the sharded dir, leave a blob
-    # (content never read — migration rebuilds from the base parquet)
-    shutil.rmtree(path)
-    legacy = os.path.join(rdir, "url_seen_cuckoo.npy")
-    with open(legacy, "wb") as f:
-        np.save(f, np.zeros(3, dtype=np.int64))
-    assert store.prefilter_path(1)[1] == legacy
+    assert len(rediscovered) > 0
+    reopened = set(rediscovered["url"])
+    keys = rediscovered["seen_key"].to_numpy(dtype=np.int64)
+    assert contains_shards(seeded.prefilter_path(2), keys).all()
 
-    kind2, path2 = store.migrate_prefilter(spark, 1)
-    assert kind2 == "cuckoo" and is_sharded(path2)
-    assert not os.path.exists(legacy)
-    base_keys = np.array(
-        sorted(r.seen_key for r in store.read_seen(spark, 1).collect()),
-        dtype=np.int64,
-    )
-    assert contains_shards(path2, base_keys).all()
-
-    # reopen_seen on a legacy layout migrates too, then shard-deletes
-    shutil.rmtree(path2)
-    with open(legacy, "wb") as f:
-        np.save(f, np.zeros(3, dtype=np.int64))
-    victims = base_keys[:5]
-    store.reopen_seen(
-        spark, 1,
-        spark.createDataFrame([(int(k),) for k in victims],
-                              "seen_key bigint"),
-    )
-    kind3, path3 = store.prefilter_path(1)
-    assert kind3 == "cuckoo" and is_sharded(path3)
-    assert not os.path.exists(legacy)
-    assert not contains_shards(path3, victims).any()
-    rest = np.array(sorted(set(base_keys) - set(victims)), dtype=np.int64)
-    assert contains_shards(path3, rest).all()
+    out = {}
+    for name, gate in (("prefilter", 0), ("plain", 10**12)):
+        root = str(tmp_path / name)
+        shutil.copytree(seeded.root, root)
+        st = SnapshotStore(root)
+        st.reopen_seen(
+            spark, 2,
+            spark.createDataFrame(
+                [(int(k),) for k in keys], "seen_key bigint"
+            ),
+        )
+        scheduler.run_round(
+            spark, st, SF_SMOKE, compact_every=1, bloom_min_seen=gate
+        )
+        delta = sorted(
+            map(tuple, st.read(spark, 3, "frontier_delta")
+                .select(*scheduler.FRONTIER_COLS).toPandas()
+                .itertuples(index=False, name=None))
+        )
+        out[name] = (schedule_rows(spark, st, 3), delta)
+    assert out["prefilter"] == out["plain"]
+    # FRONTIER_COLS leads with url
+    assert reopened <= {row[0] for row in out["prefilter"][1]}
 
 
-def test_resume_legacy_store_without_universe(spark, store):
-    """Stores committed before the persisted-universe format resume via
-    the recompute fallback instead of failing (ADVICE r1): delete the
-    round-0 universe table and n_docs/n_seen metrics, then run a round."""
+def test_unknown_store_format_refused(spark, tmp_path):
+    """A store whose round-0 manifest lacks format_version, or names
+    another one, is refused at open with a ValueError, so no round is
+    ever scheduled on it. A fresh store records the version at the
+    manifest's top level, outside the metrics."""
     import json
-    import shutil as sh
 
-    st = model.seed(N_DOCS)
+    from cc_crawl_statistics_spark.frontier.state import FORMAT_VERSION
+
+    root = str(tmp_path / "s")
+    store = SnapshotStore(root)
     scheduler.run_round(spark, store, SF_SMOKE)
-    model.run_round(st)
-    # simulate a legacy layout
-    sh.rmtree(os.path.join(store.root, "round=0000", "universe"))
-    for rnd in ("round=0000", "round=0001"):
-        mpath = os.path.join(store.root, rnd, MANIFEST)
-        with open(mpath) as f:
-            man = json.load(f)
-        man["metrics"].pop("n_docs", None)
-        man["metrics"].pop("n_seen", None)
+    for rnd in (0, 1):
+        man = store.manifest(rnd)
+        assert man["format_version"] == FORMAT_VERSION == 1
+        assert "format_version" not in man["metrics"]
+
+    mpath = os.path.join(root, "round=0000", MANIFEST)
+    with open(mpath) as f:
+        good = json.load(f)
+    rounds = sorted(os.listdir(root))
+    for bad in ({k: v for k, v in good.items() if k != "format_version"},
+                {**good, "format_version": 0}):
         with open(mpath, "w") as f:
-            json.dump(man, f)
-    scheduler.run_round(spark, store, SF_SMOKE)
-    msched = model.run_round(st)
-    assert schedule_rows(spark, store, 2) == model_rows(msched)
+            json.dump(bad, f)
+        with pytest.raises(ValueError, match="re-seed"):
+            SnapshotStore(root)
+        with pytest.raises(ValueError):
+            scheduler.run_round(spark, SnapshotStore(root), SF_SMOKE)
+        assert sorted(os.listdir(root)) == rounds
 
 
 def test_fetch_extract_invariant(spark, store):

@@ -89,126 +89,8 @@ def test_hll_insensitive_to_duplicates_and_order(values):
 
 
 # ---------------------------------------------------------------------------
-# cuckoo filter insert/contains/delete kernel (pure numpy, no Spark)
+# sharded prefilter routing (pure numpy, no Spark)
 # ---------------------------------------------------------------------------
-
-int64_keys = st.lists(
-    st.integers(min_value=-(2**63), max_value=2**63 - 1),
-    min_size=1,
-    max_size=400,
-    unique=True,
-)
-
-
-def _fresh_table(n_keys):
-    from cc_crawl_statistics_spark.frontier import cuckoo as CK
-
-    n_buckets = CK._n_buckets_for(n_keys, 0.8)
-    import numpy as np
-
-    return (
-        np.zeros((n_buckets, CK.SLOTS), dtype=np.uint16),
-        np.zeros(n_buckets, dtype=np.int64),
-        n_buckets,
-    )
-
-
-@settings(max_examples=40, deadline=None)
-@given(int64_keys)
-def test_cuckoo_no_false_negatives_property(keys):
-    import numpy as np
-
-    from cc_crawl_statistics_spark.frontier import cuckoo as CK
-
-    arr = np.array(keys, dtype=np.int64)
-    table, fill, n_buckets = _fresh_table(len(arr))
-    CK._insert_keys(table, fill, arr.view(np.uint64), n_buckets)
-    f = {"tables": [table], "n_tables": 1, "n_buckets": n_buckets}
-    assert CK.contains(f, arr).all()
-
-
-@settings(max_examples=25, deadline=None)
-@given(int64_keys)
-def test_cuckoo_delete_keeps_remaining_property(keys):
-    """The vectorized deletion kernel removes every inserted victim and
-    never disturbs the remaining keys' no-false-negative guarantee —
-    and is bit-identical to the sequential per-key reference loop."""
-    import numpy as np
-
-    from cc_crawl_statistics_spark.frontier import cuckoo as CK
-    from cc_crawl_statistics_spark.frontier import shardedfilter as SH
-
-    arr = np.array(keys, dtype=np.int64)
-    table, fill, n_buckets = _fresh_table(len(arr))
-    CK._insert_keys(table, fill, arr.view(np.uint64), n_buckets)
-    victims, rest = arr[: len(arr) // 2], arr[len(arr) // 2 :]
-
-    ref = table.copy()
-    u = victims.view(np.uint64)
-    fps = CK._fingerprint(u)
-    b1 = CK._bucket1(u, n_buckets)
-    b2 = CK._alt_bucket(b1, fps, n_buckets)
-    ref_removed = 0
-    for i in range(len(victims)):
-        for b in (b1[i], b2[i]):
-            slots = np.flatnonzero(ref[b] == fps[i])
-            if slots.size:
-                ref[b, slots[0]] = 0
-                ref_removed += 1
-                break
-
-    got = SH._delete_from_table(table, u, n_buckets)
-    assert got == ref_removed == len(victims)
-    assert np.array_equal(table, ref)
-    if len(rest):
-        f = {"tables": [table], "n_tables": 1, "n_buckets": n_buckets}
-        assert CK.contains(f, rest).all()
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=-(2**63), max_value=2**63 - 1),
-        min_size=1,
-        max_size=120,
-        unique=True,
-    ),
-    st.integers(min_value=1, max_value=4),
-)
-def test_vectorized_delete_bit_identical_with_duplicates(keys, dup_factor):
-    """Adversarial flavor of the r5 deletion-kernel property: the victim
-    list REPEATS keys (dup_factor concatenated copies), forcing shared
-    candidate pairs into the ordered fallback path; the result must stay
-    bit-identical to the sequential reference loop — table bytes AND
-    removed count — even though duplicate deletions beyond a key's
-    inserted copies clear fingerprint-colliding residue."""
-    import numpy as np
-
-    from cc_crawl_statistics_spark.frontier import cuckoo as CK
-    from cc_crawl_statistics_spark.frontier import shardedfilter as SH
-
-    arr = np.array(keys, dtype=np.int64)
-    table, fill, n_buckets = _fresh_table(len(arr))
-    CK._insert_keys(table, fill, arr.view(np.uint64), n_buckets)
-    victims = np.concatenate([arr[: max(1, len(arr) // 2)]] * dup_factor)
-    u = victims.view(np.uint64)
-
-    ref = table.copy()
-    fps = CK._fingerprint(u)
-    b1 = CK._bucket1(u, n_buckets)
-    b2 = CK._alt_bucket(b1, fps, n_buckets)
-    ref_removed = 0
-    for i in range(len(u)):
-        for b in (b1[i], b2[i]):
-            slots = np.flatnonzero(ref[b] == fps[i])
-            if slots.size:
-                ref[b, slots[0]] = 0
-                ref_removed += 1
-                break
-
-    got = SH._delete_from_table(table, u, n_buckets)
-    assert got == ref_removed
-    assert np.array_equal(table, ref)
 
 
 @settings(max_examples=25, deadline=None)

@@ -1,22 +1,20 @@
-"""Prefilter scale ladder past the bloom_min_seen gate (r5, VERDICT r4
-"Next round" #6): drive a 10^8-key seen set through sharded build →
-shard-clustered membership → two-phase deletion, and report the
-measured evidence that the 64 MiB/shard arithmetic holds:
+"""Bloom prefilter scale ladder past the bloom_min_seen gate: drive a
+10^8-key seen set through the sharded build and shard-clustered
+membership, and report the measured evidence that the 64 MiB/shard
+arithmetic holds:
 
   * per-shard file bytes vs the sizing target (header + on-disk stat),
   * membership throughput with candidates clustered by shard id,
   * per-WORKER shard-cache residency (entries × bytes actually held by
     each Python worker process after the probe — the number that must
-    stay ~cap × shard_bytes instead of the whole filter),
-  * deletion throughput for a 10^6-key reopen through the two-phase
-    shard rewrite, and post-deletion membership correctness.
+    stay ~cap × shard_bytes instead of the whole filter).
 
-Prints one JSON line per filter kind. Run on an idle box:
+Prints one JSON line. Run on an idle box:
 
-    python tools/prefilter_ladder.py [n_keys] [n_probe] [n_delete]
+    python tools/prefilter_ladder.py [n_keys] [n_probe]
 
-Defaults 10^8 / 10^7 / 10^6. The build materializes the key table to
-parquet first so build timings measure the filter, not xxhash64.
+Defaults 10^8 / 10^7. The build materializes the key table to parquet
+first so build timings measure the filter, not xxhash64.
 """
 
 from __future__ import annotations
@@ -84,7 +82,6 @@ def worker_cache_stats(spark, probes, dir_, n_shards):
 def main() -> None:
     n_keys = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000_000
     n_probe = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
-    n_delete = int(sys.argv[3]) if len(sys.argv) > 3 else 1_000_000
     spark = get_spark(app_name="prefilter-ladder")
     from cc_crawl_statistics_spark.frontier import shardedfilter as SH
 
@@ -100,53 +97,27 @@ def main() -> None:
         n_keys - n_probe // 2, n_keys + n_probe // 2
     ).select(F.xxhash64(F.col("id").cast("string")).alias("seen_key"))
 
-    for kind in ("bloom", "cuckoo"):
-        d = os.path.join(scratch, f"{kind}.d")
-        t0 = time.time()
-        if kind == "bloom":
-            header = SH.build_sharded_bloom(seen, d)
-        else:
-            header = SH.build_sharded_cuckoo(seen, d)
-        build_sec = time.time() - t0
-        shard_files = [
-            os.path.join(d, f) for f in os.listdir(d)
-            if f.startswith("shard=")
-        ]
-        sizes = [os.path.getsize(p) for p in shard_files]
-        out = {
-            "kind": kind,
-            "n_keys": n_keys,
-            "n_shards": header["n_shards"],
-            "build_sec": round(build_sec, 2),
-            "header_shard_bytes": header["shard_bytes"],
-            "max_file_bytes": max(sizes),
-            "total_filter_mib": round(sum(sizes) / (1 << 20), 1),
-            "shard_vs_64mib_target": round(max(sizes) / (64 << 20), 3),
-        }
-        out.update(worker_cache_stats(spark, probes, d, header["n_shards"]))
-        out["probe_keys_per_sec"] = int(n_probe / out["probe_sec"])
-        if kind == "cuckoo":
-            # same key derivation as `seen` over the first n_delete ids —
-            # a deterministic inserted subset (limit() would re-pick
-            # different rows between the delete job and the check below)
-            victims = spark.range(n_delete).select(
-                F.xxhash64(F.col("id").cast("string")).alias("seen_key")
-            )
-            t0 = time.time()
-            removed = SH.delete_keys_sharded(spark, d, victims)
-            out["delete_sec"] = round(time.time() - t0, 2)
-            out["delete_removed"] = int(removed)
-            out["delete_keys_per_sec"] = int(n_delete / out["delete_sec"])
-            import numpy as np
-
-            sample = np.array(
-                [r.seen_key for r in victims.limit(2000).collect()],
-                dtype=np.int64,
-            )
-            out["deleted_still_maybe_permille"] = int(
-                SH.contains_shards(d, sample).mean() * 1000
-            )
-        print(json.dumps(out))
+    d = os.path.join(scratch, "bloom.d")
+    t0 = time.time()
+    header = SH.build_sharded_bloom(seen, d)
+    build_sec = time.time() - t0
+    sizes = [
+        os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+        if f.startswith("shard=")
+    ]
+    out = {
+        "kind": "bloom",
+        "n_keys": n_keys,
+        "n_shards": header["n_shards"],
+        "build_sec": round(build_sec, 2),
+        "header_shard_bytes": header["shard_bytes"],
+        "max_file_bytes": max(sizes),
+        "total_filter_mib": round(sum(sizes) / (1 << 20), 1),
+        "shard_vs_64mib_target": round(max(sizes) / (64 << 20), 3),
+    }
+    out.update(worker_cache_stats(spark, probes, d, header["n_shards"]))
+    out["probe_keys_per_sec"] = int(n_probe / out["probe_sec"])
+    print(json.dumps(out))
     import shutil
 
     shutil.rmtree(scratch, ignore_errors=True)
