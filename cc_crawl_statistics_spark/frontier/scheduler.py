@@ -41,8 +41,6 @@ Scale design (10^10-URL frontier, 1000 executors):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -470,39 +468,6 @@ def fetch_extract(sched: DataFrame, docs: DataFrame) -> DataFrame:
     )
 
 
-# One membership UDF per compaction epoch per driver process — not one
-# per round (the UDF object itself is cheap, but constructing it reads
-# the filter header and re-registering it every round defeats plan
-# caching). Keyed by file path; a new compaction writes a new path,
-# which evicts the old entry.
-_BLOOM_UDF_CACHE: dict = {}
-
-
-def _cached_prefilter_udf(spark, path: str):
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _BLOOM_UDF_CACHE:
-        # nothing to load or broadcast here — the UDF closure carries
-        # only the header params, and executors lazily cache the shard
-        # files their batches touch (frontier/shardedfilter.py)
-        from .shardedfilter import might_contain_udf
-
-        udf = might_contain_udf(spark, path)
-        # evict only stale entries for the SAME store (a new compaction
-        # writes a new path under the same root) — clearing everything
-        # would make two interleaved stores in one process (A/B runs,
-        # the benchmark's copied stores) rebuild their UDFs on every
-        # alternating round
-        root = os.path.dirname(os.path.dirname(path))
-        for k in [
-            k
-            for k in _BLOOM_UDF_CACHE
-            if k[0] == key[0] and k[1].startswith(root + os.sep)
-        ]:
-            del _BLOOM_UDF_CACHE[k]
-        _BLOOM_UDF_CACHE[key] = udf
-    return _BLOOM_UDF_CACHE[key]
-
-
 def run_round(
     spark: SparkSession,
     store: SnapshotStore,
@@ -740,19 +705,23 @@ def run_round(
 
     def discover_new_urls(sched_materialized: DataFrame) -> DataFrame:
         """Expand the (parquet-materialized) schedule's links and keep the
-        never-seen URLs. With a materialized Bloom (written at compaction):
-        candidates the Bloom rejects are DEFINITELY absent from the
-        compacted base, so they only anti-join the small post-compaction
-        deltas (broadcastable); Bloom-positive candidates take the exact
-        anti-join against the full seen set. Results are bit-identical
-        either way (test_frontier.py::test_compaction_and_bloom_bit_identical);
+        never-seen URLs. With a materialized Bloom (written at compaction)
+        every candidate is probed ONCE (shardedfilter.probe: a join of
+        the broadcast candidates against the shard table, all Catalyst
+        expressions) and the flag steers two conditional anti-joins in
+        one lineage: candidates the Bloom rejects are DEFINITELY absent
+        from the compacted base, so they only anti-join the small
+        post-compaction deltas (broadcast); Bloom-positive candidates
+        take the exact anti-join against the full seen set. No filter on
+        the flag exists for Catalyst to push into the universe scan.
+        Results are bit-identical either way
+        (test_frontier.py::test_compaction_and_bloom_bit_identical);
         what the Bloom buys at 10^10 keys is that the common case
-        (brand-new URL) never shuffles against the base table. Below
-        ``bloom_min_seen`` keys the plain anti-join wins (measured 11.4s
-        vs 12.9s/round at 4×10^5 seen keys, BENCH.md: the Arrow stage +
-        candidate split costs more than a small in-memory anti-join
-        saves), so the prefilter engages only once the seen set is large
-        enough to matter."""
+        (brand-new URL) never shuffles against the base table. The
+        prefilter engages only past ``bloom_min_seen`` seen keys. The
+        figure behind that default (plain anti-join 11.4s vs 12.9s/round
+        at 4×10^5 seen keys, BENCH.md) was measured on the earlier
+        Arrow-UDF plan that probed the universe twice, and is stale."""
         discovered = (expand_fn or expand_links)(
             sched_materialized, universe, n_docs
         )
@@ -761,46 +730,29 @@ def run_round(
             if prev_seen >= bloom_min_seen
             else None
         )
-        if pf_path is not None:
-            might = _timed(
-                "bloom_load", lambda: _cached_prefilter_udf(spark, pf_path)
-            )
-            base_rnd = store.seen_base_round(latest)
-            recent = store.read_seen_deltas(spark, base_rnd + 1, latest)
-            # cluster candidates by their shard id first, so each task —
-            # and so each executor's lazy shard cache — touches ~one
-            # shard file instead of all of them (at 10^10 keys: ~64 MiB
-            # resident per executor instead of the full filter). The
-            # shuffle is bounded by the round's discovery delta and only
-            # happens past the bloom_min_seen gate, where it is noise
-            # next to the anti-join it saves.
-            from .shardedfilter import load_header, shard_route_udf
-
-            n_shards = load_header(pf_path)["n_shards"]
-            route = shard_route_udf(n_shards)
-            cand = discovered.repartition(
-                min(n_shards, n_partitions * 4),
-                route(seen_key(F.col("url"))),
-            )
-            cand = cand.withColumn(
-                "_maybe", might(seen_key(F.col("url")))
-            )
-            clean = cand.filter(~F.col("_maybe")).join(
-                F.broadcast(recent),
-                seen_key(cand.url) == recent.seen_key,
-                "left_anti",
-            )
-            maybe = cand.filter(F.col("_maybe")).join(
+        if pf_path is None:
+            return discovered.join(
                 seen,
-                seen_key(cand.url) == seen.seen_key,
+                seen_key(discovered.url) == seen.seen_key,
                 "left_anti",
             )
-            return clean.unionByName(maybe).drop("_maybe")
-        return discovered.join(
-            seen,
-            seen_key(discovered.url) == seen.seen_key,
+        from .shardedfilter import probe
+
+        base_rnd = store.seen_base_round(latest)
+        recent = store.read_seen_deltas(spark, base_rnd + 1, latest)
+        cand = probe(
+            discovered.withColumn("_key", seen_key(F.col("url"))),
+            F.col("_key"),
+            pf_path,
+        )
+        cand = cand.join(
+            F.broadcast(recent),
+            (cand._key == recent.seen_key) & ~cand._maybe,
             "left_anti",
         )
+        return cand.join(
+            seen, (cand._key == seen.seen_key) & cand._maybe, "left_anti"
+        ).drop("_key", "_maybe")
 
     # Retirement is LOGICAL, not a rewrite: the corpus-scale frontier is
     # never rebuilt or reshuffled in a round. The round appends one

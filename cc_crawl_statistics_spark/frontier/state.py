@@ -19,6 +19,23 @@ There is one store format. Every manifest carries ``format_version``
 manifest names another version (or none) fails loudly: the engine reads
 no other layout, so such a store must be re-seeded.
 
+Every manifest also records, under its top-level ``schemas`` key, the
+schema of every table kind as of that snapshot: the tables the round
+wrote, plus the kinds it inherits from the previous manifest (the
+Iceberg table-metadata pattern). Every read binds a recorded schema, so
+no read launches a parquet schema-inference job:
+  - a single-round read binds that round's recorded schema;
+  - a derived read inside ``commit`` binds the schema of the DataFrame
+    it just wrote;
+  - a multi-path read binds the newest recorded schema of its kind;
+  - compaction outputs reuse the schema of the kind they compact
+    (``url_seen_base`` and reopen lists are read as ``url_seen_delta``,
+    a compacted ``frontier`` as ``frontier``).
+A table whose schema widens mid-store (``schedule`` gains
+``allowed``/``fetcher`` when enforcement or fetcher sharding is turned
+on) is read with each round's own schema, and multi-path readers project
+only columns present in every round.
+
 Scale notes:
   - the frontier is written ``repartitionByRange(N, "surt_key")`` so each
     partition owns a contiguous SURT range — the next round's scan is
@@ -32,11 +49,11 @@ Scale notes:
   - ``compact_seen`` merges the deltas into one hash-partitioned base
     every K rounds, bounding the file/listing count read_seen unions (at
     thousands of rounds an uncompacted store is a file-listing problem,
-    ~64 bits/key ≈ 80 GiB at 10^10 URLs) and materializes the Bloom
-    sharded Bloom prefilter (frontier/shardedfilter.py) the anti-join
-    consults: candidates the Bloom rejects as definitely-unseen skip the
-    exact anti-join shuffle; "maybe seen" rows still go through it, so
-    results stay exact.
+    ~64 bits/key ≈ 80 GiB at 10^10 URLs) and materializes the sharded
+    Bloom prefilter (frontier/shardedfilter.py) the anti-join consults:
+    candidates the Bloom rejects as definitely-unseen skip the exact
+    anti-join against the base; "maybe seen" rows still go through it,
+    so results stay exact.
 """
 
 from __future__ import annotations
@@ -46,9 +63,10 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 PREFILTER = "url_seen_bloom.d"
 
 
@@ -66,31 +84,35 @@ class SnapshotStore:
                     f"this engine reads only {FORMAT_VERSION}; re-seed the "
                     "store (run_round on an empty root)"
                 )
-        # Per-table-kind schema cache: every spark.read.parquet without an
-        # explicit schema pays a driver-side footer read for inference.
-        # A round reads 6-7 store tables, so at steady state those footer
-        # reads are a constant ~0.3-0.5s/round of driver latency. The
-        # schema of a table kind never changes within a store, so the
-        # first read's inferred schema is reused for the rest of the
-        # store handle's life (a resume constructs a fresh handle and
-        # re-infers once).
-        self._schemas: dict[str, object] = {}
 
     def _round_dir(self, rnd: int) -> str:
         return os.path.join(self.root, f"round={rnd:04d}")
 
-    def _read_parquet(
-        self, spark: SparkSession, kind: str, *paths: str
+    def _schemas(self, rnd: int) -> dict:
+        """The ``schemas`` entry of the newest committed manifest at or
+        below round ``rnd`` ({} when there is none)."""
+        for r in range(rnd, -1, -1):
+            path = os.path.join(self._round_dir(r), MANIFEST)
+            if os.path.exists(path):
+                with open(path) as f:
+                    return json.load(f)["schemas"]
+        return {}
+
+    def _schema(self, kind: str, rnd: int) -> StructType:
+        schemas = self._schemas(rnd)
+        if kind not in schemas:
+            raise KeyError(
+                f"no schema recorded for table kind {kind!r} as of round "
+                f"{rnd} in {self.root}"
+            )
+        return StructType.fromJson(schemas[kind])
+
+    def _read(
+        self, spark: SparkSession, kind: str, rnd: int, *paths: str
     ) -> DataFrame:
-        """Read parquet path(s) of one table kind with the cached schema."""
-        schema = self._schemas.get(kind)
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(*paths)
-        if schema is None:
-            self._schemas[kind] = df.schema
-        return df
+        """Read parquet path(s) of one table kind, bound to the kind's
+        schema as recorded at round ``rnd``."""
+        return spark.read.schema(self._schema(kind, rnd)).parquet(*paths)
 
     def table_rows(self, rnd: int, table: str) -> int:
         """Exact row count of a written table from parquet footer metadata —
@@ -118,14 +140,11 @@ class SnapshotStore:
         return best
 
     def read(self, spark: SparkSession, rnd: int, table: str) -> DataFrame:
-        # no kind-schema cache for single-dir reads: one bounded dir infers
-        # cheaply, and a table's schema may legitimately widen between
-        # rounds (schedule gains allowed/fetcher when enforcement/sharding
-        # is enabled mid-store) — a cached narrower schema would silently
-        # hide the new columns. The cache serves the MULTI-path readers
-        # (read_frontier / read_seen_deltas), which project only columns
-        # present in every round.
-        return spark.read.parquet(os.path.join(self._round_dir(rnd), table))
+        """One table of one round, bound to that round's recorded schema
+        (so a widened table reads with its new columns)."""
+        return self._read(
+            spark, table, rnd, os.path.join(self._round_dir(rnd), table)
+        )
 
     def seen_base_round(self, upto_rnd: int) -> int | None:
         """Highest round ≤ upto_rnd holding a compacted url_seen_base."""
@@ -154,8 +173,9 @@ class SnapshotStore:
             os.path.join(self._round_dir(r), "url_seen_delta")
             for r in range(start, upto_rnd + 1)
         ]
-        seen = self._read_parquet(
-            spark, "url_seen_delta", *[p for p in paths if os.path.exists(p)]
+        seen = self._read(
+            spark, "url_seen_delta", upto_rnd,
+            *[p for p in paths if os.path.exists(p)],
         )
         # reopen lists: bounded per round (recrawl tiers), retired by the
         # next compaction (the rewritten base already excludes them).
@@ -167,7 +187,7 @@ class SnapshotStore:
             p = os.path.join(self._round_dir(r0), "url_seen_reopen")
             if not os.path.exists(p):
                 continue
-            rk = self._read_parquet(spark, "url_seen_delta", p)
+            rk = self._read(spark, "url_seen_delta", upto_rnd, p)
             # a key re-seen AFTER its reopen is seen again — keep it
             readd = self.read_seen_deltas(spark, r0 + 1, upto_rnd)
             eff = rk.join(readd, "seen_key", "left_anti")
@@ -203,7 +223,7 @@ class SnapshotStore:
         paths = [p for p in paths if os.path.exists(p)]
         if not paths:
             return spark.createDataFrame([], "seen_key bigint")
-        return self._read_parquet(spark, "url_seen_delta", *paths)
+        return self._read(spark, "url_seen_delta", upto_rnd, *paths)
 
     def frontier_base_round(self, upto_rnd: int) -> int | None:
         """Highest round ≤ upto_rnd holding a materialized full frontier
@@ -258,12 +278,10 @@ class SnapshotStore:
         ]
         deltas = [p for p in deltas if os.path.exists(p)]
         if deltas:
-            # same column set as the frontier base (FRONTIER_COLS) — reuse
-            # its cached schema; explicit-schema parquet reads bind by name
             cur = cur.unionByName(
-                self._read_parquet(spark, "frontier", *deltas).withColumn(
-                    "_src_rnd", rnd_of_path
-                )
+                self._read(
+                    spark, "frontier_delta", upto_rnd, *deltas
+                ).withColumn("_src_rnd", rnd_of_path)
             )
         retired = []
         for t in ("schedule", "blocked"):
@@ -274,7 +292,7 @@ class SnapshotStore:
             paths = [p for p in paths if os.path.exists(p)]
             if paths:
                 retired.append(
-                    self._read_parquet(spark, t, *paths).select(
+                    self._read(spark, t, upto_rnd, *paths).select(
                         "url", rnd_of_path.alias("_ret_rnd")
                     )
                 )
@@ -333,14 +351,14 @@ class SnapshotStore:
         seen.repartition(n_partitions, "seen_key").write.mode(
             "overwrite"
         ).parquet(tmp)
-        # the prefilter is SHARDED (frontier/shardedfilter.py): each Spark
-        # task builds and writes its own key-range shard file; the filter
-        # never exists as one driver/broadcast object (the 10^10-key
-        # frame makes a single blob ~12.5 GB — SURVEY §7 hard part 6)
+        # the prefilter is a SHARDED table (frontier/shardedfilter.py): one
+        # words row per key-range shard; the filter never exists as one
+        # driver/broadcast object (the 10^10-key frame makes a single blob
+        # ~12.5 GB — SURVEY §7 hard part 6)
         from .shardedfilter import build_sharded_bloom
 
         build_sharded_bloom(
-            spark.read.parquet(tmp),
+            self._read(spark, "url_seen_delta", upto_rnd, tmp),
             os.path.join(rdir, PREFILTER),
             bits_per_key=bloom_bits_per_key,
         )
@@ -453,14 +471,16 @@ class SnapshotStore:
         self.last_commit_timings = {}
 
         # The table writes are independent jobs over already-materialized
-        # inputs (checkpointed/persisted upstream), so they are submitted
-        # CONCURRENTLY from driver threads: py4j releases the GIL during
-        # JVM work and Spark schedules the jobs side by side, overlapping
-        # the per-job fixed latency (driver scheduling + output commit)
-        # that otherwise serializes — measured as the largest slice of the
-        # round's constant cost (BENCH.md Amdahl fit). A failed write
-        # raises before the manifest is written, so crash semantics are
-        # unchanged (no manifest = round never happened).
+        # inputs (checkpointed/persisted upstream), so each wave submits
+        # them CONCURRENTLY, one driver thread per table: py4j releases the
+        # GIL during JVM work and Spark schedules the jobs side by side,
+        # overlapping the per-job fixed latency (driver scheduling + output
+        # commit) that otherwise serializes — measured as the largest slice
+        # of the round's constant cost (BENCH.md Amdahl fit). A failed
+        # write raises before the manifest is written, so crash semantics
+        # are unchanged (no manifest = round never happened).
+        written: dict[str, StructType] = {}
+
         def _write(item):
             name, df = item
             path = os.path.join(rdir, name)
@@ -469,55 +489,46 @@ class SnapshotStore:
             self.last_commit_timings[f"write_{name}"] = round(
                 _time.time() - t0, 3
             )
+            written[name] = df.schema
 
-        t0 = _time.time()
-        workers = int(
-            os.environ.get("SPARK_GRAFT_COMMIT_WORKERS", "0")
-        ) or max(len(tables), 1)
-        eager = {n: df for n, df in tables.items() if not callable(df)}
-        derived = {n: fn for n, fn in tables.items() if callable(fn)}
+        def _write_wave(items):
+            with ThreadPoolExecutor(max_workers=max(len(items), 1)) as pool:
+                list(pool.map(_write, items))
+
         class _NotYetWritten(Exception):
             pass
 
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            list(pool.map(_write, eager.items()))
-            written = set(eager)
-            if derived:
-                from pyspark.sql import SparkSession
+        from pyspark.sql import SparkSession
 
-                spark = SparkSession.getActiveSession()
+        spark = SparkSession.getActiveSession()
 
-                def _read(name):
-                    if name not in written:
-                        raise _NotYetWritten(name)
-                    # NO kind-schema cache here: a round may legitimately
-                    # widen a table's schema mid-store-life (e.g. turning
-                    # on fetcher sharding or per-path robots enforcement
-                    # adds schedule columns), and binding the cached
-                    # NARROWER schema would silently drop the new columns
-                    # from this round's derived tables. Inference over one
-                    # just-written bounded dir is cheap; historical
-                    # multi-path readers (read_frontier retire lists) keep
-                    # the cache — they project only always-present columns.
-                    return spark.read.parquet(os.path.join(rdir, name))
+        def _read(name):
+            # a derived read binds the schema of the DataFrame just
+            # written, so a round that widens a table reads its own columns
+            if name not in written:
+                raise _NotYetWritten(name)
+            return spark.read.schema(written[name]).parquet(
+                os.path.join(rdir, name)
+            )
 
-                remaining = dict(derived)
-                while remaining:
-                    wave = []
-                    for n, fn in list(remaining.items()):
-                        try:
-                            wave.append((n, fn(_read)))
-                        except _NotYetWritten:
-                            continue
-                    if not wave:
-                        raise ValueError(
-                            "circular derived-table dependencies: "
-                            f"{sorted(remaining)}"
-                        )
-                    list(pool.map(_write, wave))
-                    for n, _ in wave:
-                        written.add(n)
-                        del remaining[n]
+        t0 = _time.time()
+        _write_wave([(n, df) for n, df in tables.items() if not callable(df)])
+        remaining = {n: fn for n, fn in tables.items() if callable(fn)}
+        while remaining:
+            wave = []
+            for n, fn in list(remaining.items()):
+                try:
+                    wave.append((n, fn(_read)))
+                except _NotYetWritten:
+                    continue
+            if not wave:
+                raise ValueError(
+                    "circular derived-table dependencies: "
+                    f"{sorted(remaining)}"
+                )
+            _write_wave(wave)
+            for n, _ in wave:
+                del remaining[n]
         self.last_commit_timings["writes_wall"] = round(_time.time() - t0, 3)
         lineage = {
             name: sorted(
@@ -528,15 +539,8 @@ class SnapshotStore:
             for name in tables
         }
         if callable(metrics):
-            from pyspark.sql import SparkSession
-
-            spark = SparkSession.getActiveSession()
             t0 = _time.time()
-            # same no-cache rule as the derived-table reads above: this
-            # round's tables may be wider than the cached kind schema
-            metrics = metrics(
-                lambda name: spark.read.parquet(os.path.join(rdir, name))
-            )
+            metrics = metrics(_read)
             self.last_commit_timings["metrics"] = round(_time.time() - t0, 3)
         tmp = os.path.join(rdir, MANIFEST + ".tmp")
         with open(tmp, "w") as f:
@@ -546,6 +550,12 @@ class SnapshotStore:
                     "round": rnd,
                     "metrics": metrics,
                     "partition_lineage": lineage,
+                    # every kind as of this snapshot: inherited, then this
+                    # round's writes (outside metrics, which stay digestable)
+                    "schemas": {
+                        **self._schemas(rnd - 1),
+                        **{n: s.jsonValue() for n, s in written.items()},
+                    },
                 },
                 f,
                 indent=1,

@@ -36,6 +36,18 @@ def model_rows(sched):
     )
 
 
+def bloom_flags(spark, path, keys):
+    """Prefilter flag per key (True = maybe seen) from the shared
+    DataFrame probe the scheduler uses."""
+    from cc_crawl_statistics_spark.frontier.shardedfilter import probe
+
+    df = spark.createDataFrame([(int(k),) for k in keys], "seen_key bigint")
+    return {
+        r.seen_key: r._maybe
+        for r in probe(df, F.col("seen_key"), path).collect()
+    }
+
+
 @pytest.fixture()
 def store(tmp_path):
     return SnapshotStore(str(tmp_path / "frontier"))
@@ -187,6 +199,9 @@ def test_compaction_and_bloom_bit_identical(spark, tmp_path):
     seen_a = {r.seen_key for r in a.read_seen(spark, 3).collect()}
     seen_b = {r.seen_key for r in b.read_seen(spark, 3).collect()}
     assert seen_a == seen_b
+    # no false negatives: the probe flags every compacted key "maybe"
+    flags = bloom_flags(spark, b.prefilter_path(3), seen_b)
+    assert len(flags) == len(seen_b) and all(flags.values())
 
 
 def test_reopen_seen_for_recrawl(spark, tmp_path):
@@ -194,10 +209,6 @@ def test_reopen_seen_for_recrawl(spark, tmp_path):
     later delta re-adds them) and leaves the materialized Bloom untouched:
     every base key, reopened or not, stays "maybe present" — the recrawl
     re-open path."""
-    from cc_crawl_statistics_spark.frontier.shardedfilter import (
-        contains_shards,
-    )
-
     store = SnapshotStore(str(tmp_path / "s"))
     scheduler.run_round(
         spark, store, SF_SMOKE, compact_every=1, bloom_min_seen=0
@@ -216,10 +227,8 @@ def test_reopen_seen_for_recrawl(spark, tmp_path):
     assert seen_after == seen_before - set(victims)
     # the Bloom is never edited: reopened keys stay "maybe" and take the
     # exact anti-join, which consults the reopen-adjusted seen set
-    import numpy as np
-
-    path = store.prefilter_path(2)
-    assert contains_shards(path, np.array(base_keys, dtype=np.int64)).all()
+    flags = bloom_flags(spark, store.prefilter_path(2), base_keys)
+    assert len(flags) == len(base_keys) and all(flags.values())
     # a later delta re-adding a reopened key wins over the reopen
     import os as _os
 
@@ -273,12 +282,6 @@ def test_reopen_under_bloom_prefilter_bit_identical(spark, tmp_path):
     the same schedule and discovery delta as the plain anti-join
     (bloom_min_seen above any seen-set size), and the delta must
     re-admit every reopened URL."""
-    import numpy as np
-
-    from cc_crawl_statistics_spark.frontier.shardedfilter import (
-        contains_shards,
-    )
-
     seeded = SnapshotStore(str(tmp_path / "seeded"))
     for _ in range(2):
         scheduler.run_round(
@@ -303,8 +306,8 @@ def test_reopen_under_bloom_prefilter_bit_identical(spark, tmp_path):
     )
     assert len(rediscovered) > 0
     reopened = set(rediscovered["url"])
-    keys = rediscovered["seen_key"].to_numpy(dtype=np.int64)
-    assert contains_shards(seeded.prefilter_path(2), keys).all()
+    keys = rediscovered["seen_key"].tolist()
+    assert all(bloom_flags(spark, seeded.prefilter_path(2), keys).values())
 
     out = {}
     for name, gate in (("prefilter", 0), ("plain", 10**12)):
@@ -333,9 +336,10 @@ def test_reopen_under_bloom_prefilter_bit_identical(spark, tmp_path):
 
 def test_unknown_store_format_refused(spark, tmp_path):
     """A store whose round-0 manifest lacks format_version, or names
-    another one, is refused at open with a ValueError, so no round is
-    ever scheduled on it. A fresh store records the version at the
-    manifest's top level, outside the metrics."""
+    another one (the v1 layout included), is refused at open with a
+    ValueError, so no round is ever scheduled on it. A fresh store
+    records the version and the table schemas at the manifest's top
+    level, outside the metrics."""
     import json
 
     from cc_crawl_statistics_spark.frontier.state import FORMAT_VERSION
@@ -345,15 +349,20 @@ def test_unknown_store_format_refused(spark, tmp_path):
     scheduler.run_round(spark, store, SF_SMOKE)
     for rnd in (0, 1):
         man = store.manifest(rnd)
-        assert man["format_version"] == FORMAT_VERSION == 1
+        assert man["format_version"] == FORMAT_VERSION == 2
         assert "format_version" not in man["metrics"]
+        assert "url_seen_delta" in man["schemas"]
+        assert "schemas" not in man["metrics"]
 
     mpath = os.path.join(root, "round=0000", MANIFEST)
     with open(mpath) as f:
         good = json.load(f)
     rounds = sorted(os.listdir(root))
     for bad in ({k: v for k, v in good.items() if k != "format_version"},
-                {**good, "format_version": 0}):
+                {**good, "format_version": 0},
+                # a v1 manifest: no recorded schemas
+                {**{k: v for k, v in good.items() if k != "schemas"},
+                 "format_version": 1}):
         with open(mpath, "w") as f:
             json.dump(bad, f)
         with pytest.raises(ValueError, match="re-seed"):
@@ -361,6 +370,102 @@ def test_unknown_store_format_refused(spark, tmp_path):
         with pytest.raises(ValueError):
             scheduler.run_round(spark, SnapshotStore(root), SF_SMOKE)
         assert sorted(os.listdir(root)) == rounds
+
+
+def _record_write_plans(monkeypatch) -> dict:
+    """Physical plan of every parquet write from here on, keyed by the
+    written directory's name."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans: dict = {}
+    write = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        plans[os.path.basename(path)] = (
+            self._df._jdf.queryExecution().executedPlan().toString()
+        )
+        return write(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return plans
+
+
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def test_prefiltered_round_plan_probes_candidates_once(
+    spark, tmp_path, monkeypatch
+):
+    """The Bloom probe of a prefiltered round runs once, in Catalyst, on
+    the candidates: the frontier_delta plan has no Python node and no
+    Union, no Filter or scan evaluates a hash of the URL (so nothing was
+    pushed into the universe scan), and the shard table is scanned by
+    exactly one join. Compaction starts no Python worker either."""
+    store = SnapshotStore(str(tmp_path / "s"))
+    scheduler.run_round(spark, store, SF_SMOKE, compact_every=0)
+    plans = _record_write_plans(monkeypatch)
+    store.compact_seen(spark, 1)
+    assert {"url_seen_base.tmp", "url_seen_bloom.d"} <= set(plans)
+    for name, plan in plans.items():
+        assert not any(n in plan for n in PYTHON_NODES), (name, plan)
+    plans.clear()
+    # scan locations untruncated in the plan string
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        scheduler.run_round(
+            spark, store, SF_SMOKE, compact_every=0, bloom_min_seen=0
+        )
+    finally:
+        spark.conf.set(key, old)
+    plan = plans["frontier_delta"]
+    for node in (*PYTHON_NODES, "Union"):
+        assert node not in plan, (node, plan)
+    universe = [ln for ln in plan.splitlines() if "round=0000/universe" in ln]
+    assert len(universe) == 1 and "xxhash64" not in universe[0], plan
+    for ln in plan.splitlines():
+        node = ln.lstrip(" :+-")
+        if node.startswith(("Filter", "FileScan")):
+            assert "xxhash64" not in node, (ln, plan)
+    assert plan.count("url_seen_bloom.d") == 1, plan
+
+
+def test_store_reads_run_no_schema_inference(spark, tmp_path, monkeypatch):
+    """Every store read binds a recorded schema: a prefiltered round,
+    both compactions and a resume through a fresh handle never call
+    DataFrameReader.parquet without .schema() first (each such call is
+    a footer-reading Spark job)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root = str(tmp_path / "s")
+    seeded = SnapshotStore(root)
+    scheduler.run_round(spark, seeded, SF_SMOKE, compact_every=0)
+
+    bind, parquet = DataFrameReader.schema, DataFrameReader.parquet
+
+    def schema(self, *a, **k):
+        self._bound = True
+        return bind(self, *a, **k)
+
+    def checked_parquet(self, *paths, **k):
+        if not getattr(self, "_bound", False):
+            raise AssertionError(f"schema inference for {paths}")
+        return parquet(self, *paths, **k)
+
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", checked_parquet)
+    seeded.compact_seen(spark, 1)
+    seeded.compact_frontier(spark, 1)
+    m2 = scheduler.run_round(
+        spark, seeded, SF_SMOKE, compact_every=0, bloom_min_seen=0
+    )
+    m3 = scheduler.run_round(
+        spark, SnapshotStore(root), SF_SMOKE, compact_every=0,
+        bloom_min_seen=0,
+    )
+    assert (m2["round"], m3["round"]) == (2, 3)
+    assert m3["n_scheduled"] > 0
 
 
 def test_fetch_extract_invariant(spark, store):
@@ -462,14 +567,11 @@ def test_rediscovery_after_reopen_survives_old_retire(spark, tmp_path):
     schedule retire list when read_frontier reconstructs base+deltas
     (retires are round-aware: a retire list only applies to pending rows
     discovered before it was written)."""
-    import os as _os
-
     store = SnapshotStore(str(tmp_path / "s"))
 
     def write(rnd, table, df):
-        df.write.mode("overwrite").parquet(
-            _os.path.join(store.root, f"round={rnd:04d}", table)
-        )
+        # through commit, so the manifest records the table's schema
+        store.commit(rnd, {table: df}, {"round": rnd})
 
     write(
         0,
@@ -836,9 +938,9 @@ def test_enforce_robots_paths_bit_for_bit(spark, store):
 
 def test_mid_store_flag_enable_widens_schedule_schema(spark, store):
     """Turning enforcement/sharding ON for a store whose earlier rounds
-    wrote the narrow schedule schema must not bind the cached narrow
-    schema to the new round's tables (regression: the commit-internal
-    and metrics reads dropped the new columns)."""
+    wrote the narrow schedule schema must not bind an earlier round's
+    narrow schema to the new round's tables (regression: the
+    commit-internal and metrics reads dropped the new columns)."""
     scheduler.run_round(spark, store, SF_SMOKE)
     m2 = scheduler.run_round(
         spark, store, SF_SMOKE, enforce_robots_paths=True, n_fetchers=4
