@@ -9,8 +9,7 @@ scaled ×BENCH_FACTOR to ~1.5M fetch rows — the sandbox stand-in for the
 100 TB table; all plans are the same shape they'd have at scale).
 
 Runs on local[$SPARK_GRAFT_CPUS] (default 32). Scaling-efficiency evidence
-(same job at local[8] vs local[32]) is produced by tools/scaling_evidence.py
-and recorded in BENCH.md.
+(the same job at pinned CPU levels) comes from tools/ladder.py.
 """
 
 from __future__ import annotations

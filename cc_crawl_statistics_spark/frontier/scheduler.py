@@ -58,8 +58,9 @@ ATTR_COLS = ("domain", "tld", "mime_detected", "languages", "status")
 # rows made its per-round corpus rewrite ~25% slower; under the delta
 # engine only the bounded discovery delta and periodic compaction pay the
 # width, while dropping the universe join removes a full corpus scan plus
-# a broadcast-build serial tail from EVERY round (BENCH.md sched-phase
-# decomposition: that tail was the round's dominant non-scaling term).
+# a broadcast-build serial tail from EVERY round (BENCH.md design decision
+# "frontier-side scheduling": that tail was the round's dominant
+# non-scaling term).
 FRONTIER_COLS = (
     "url",
     "surt_key",
@@ -153,6 +154,26 @@ def host_ledger_formula(universe: DataFrame) -> DataFrame:
     )
 
 
+def _enqueue(universe: DataFrame, kids: DataFrame, on) -> DataFrame:
+    """Frontier rows for the discovered ``kids`` (a bounded kid set with a
+    ``depth`` column), looked up in the universe by the ``on`` condition:
+    the kid set broadcasts into the corpus-scale universe scan, and the
+    child's score, link-graph key and page attributes come from its
+    universe row. This is the one place the universe is scanned per
+    round, so scheduling never joins back into the corpus
+    (FRONTIER_COLS)."""
+    return universe.join(F.broadcast(kids), on, "inner").select(
+        "url",
+        "surt_key",
+        "host",
+        "depth",
+        ((F.col("doc_id") * 37) % 100).alias("score"),
+        F.lit("pending").alias("state"),
+        "doc_id",
+        *ATTR_COLS,
+    )
+
+
 def expand_links(scheduled: DataFrame, universe: DataFrame, n_docs: int) -> DataFrame:
     """Deterministic link expansion: fetching doc d discovers docs
     (2d+1) mod N and (3d+7) mod N. Children inherit depth+1 and the
@@ -175,21 +196,7 @@ def expand_links(scheduled: DataFrame, universe: DataFrame, n_docs: int) -> Data
     )
     # one row per (child url, min depth); dedup before the seen anti-join
     kids = kids.groupBy("child_doc_id").agg(F.min("depth").alias("depth"))
-    return universe.join(
-        F.broadcast(kids), kids.child_doc_id == universe.doc_id, "inner"
-    ).select(
-        "url",
-        "surt_key",
-        "host",
-        "depth",
-        ((F.col("doc_id") * 37) % 100).alias("score"),
-        F.lit("pending").alias("state"),
-        # the child's link-graph key + page attributes ride into the
-        # frontier here — the one place the universe is scanned per round —
-        # so scheduling never joins back into the corpus (FRONTIER_COLS)
-        "doc_id",
-        *ATTR_COLS,
-    )
+    return _enqueue(universe, kids, kids.child_doc_id == universe.doc_id)
 
 
 def html_discovery(spark, sf_dir: str, pages: DataFrame | None = None):
@@ -243,20 +250,8 @@ def html_discovery(spark, sf_dir: str, pages: DataFrame | None = None):
             .agg(F.min("depth").alias("depth"))
         )
         # enqueue only URLs that exist in the fetchable universe (dangling
-        # outlinks point off-corpus); attributes/score come from the
-        # universe row exactly as in expand_links
-        return universe.join(
-            F.broadcast(kids), kids.child_url == universe.url, "inner"
-        ).select(
-            "url",
-            "surt_key",
-            "host",
-            "depth",
-            ((F.col("doc_id") * 37) % 100).alias("score"),
-            F.lit("pending").alias("state"),
-            "doc_id",
-            *ATTR_COLS,
-        )
+        # outlinks point off-corpus)
+        return _enqueue(universe, kids, kids.child_url == universe.url)
 
     return expand
 
@@ -478,7 +473,6 @@ def run_round(
     docs: DataFrame | None = None,
     compact_every: int = 16,
     bloom_min_seen: int = 10_000_000,
-    timings: dict | None = None,
     expand_fn=None,
     age_boost: int = 0,
     n_fetchers: int = 0,
@@ -577,15 +571,6 @@ def run_round(
 
     rnd = latest + 1
 
-    import time as _time
-
-    def _timed(label, thunk):
-        t0 = _time.time()
-        out = thunk()
-        if timings is not None:
-            timings[label] = round(_time.time() - t0, 3)
-        return out
-
     frontier = store.read_frontier(
         spark, latest, keep_src_rnd=age_boost > 0
     )
@@ -639,10 +624,11 @@ def run_round(
     # (inside the concurrent commit) IS its one materialization — every
     # downstream consumer (link expansion, round statistics, fetch/extract,
     # the next round's retire list) re-reads that budget-bounded parquet.
-    # Measured (BENCH.md sched-phase decomposition): the universe broadcast
-    # join + eager localCheckpoint this replaces were the round's largest
-    # per-level-invariant cost — a broadcast-build serial tail scaling
-    # 1.4–1.9× across a 4× core span while every corpus scan scaled ≥2.8×.
+    # Measured (BENCH.md design decision "frontier-side scheduling"): the
+    # universe broadcast join + eager localCheckpoint this replaces were
+    # the round's largest per-level-invariant cost — a broadcast-build
+    # serial tail scaling 1.4–1.9× across a 4× core span while every
+    # corpus scan scaled ≥2.8×.
     score_col = "score"
     if age_boost > 0:
         eligible = eligible.withColumn(
@@ -720,8 +706,9 @@ def run_round(
         (brand-new URL) never shuffles against the base table. The
         prefilter engages only past ``bloom_min_seen`` seen keys. The
         figure behind that default (plain anti-join 11.4s vs 12.9s/round
-        at 4×10^5 seen keys, BENCH.md) was measured on the earlier
-        Arrow-UDF plan that probed the universe twice, and is stale."""
+        at 4×10^5 seen keys, BENCH.md design decision "bloom_min_seen
+        gate") was measured on the earlier Arrow-UDF plan that probed the
+        universe twice, and is stale."""
         discovered = (expand_fn or expand_links)(
             sched_materialized, universe, n_docs
         )
@@ -857,12 +844,7 @@ def run_round(
             else read("schedule"),
             docs,
         )
-    out = _timed(
-        "commit", lambda: store.commit(rnd, tables, metrics_from_snapshot)
-    )
-    if timings is not None:
-        for k, v in getattr(store, "last_commit_timings", {}).items():
-            timings[f"c_{k}"] = v
+    out = store.commit(rnd, tables, metrics_from_snapshot)
     if compact_every and rnd % compact_every == 0:
         store.compact_seen(spark, rnd, n_partitions)
         store.compact_frontier(spark, rnd, n_partitions)

@@ -476,9 +476,10 @@ class SnapshotStore:
         # GIL during JVM work and Spark schedules the jobs side by side,
         # overlapping the per-job fixed latency (driver scheduling + output
         # commit) that otherwise serializes — measured as the largest slice
-        # of the round's constant cost (BENCH.md Amdahl fit). A failed
-        # write raises before the manifest is written, so crash semantics
-        # are unchanged (no manifest = round never happened).
+        # of the round's constant cost (BENCH.md design decision
+        # "concurrent commit writes"). A failed write raises before the
+        # manifest is written, so crash semantics are unchanged (no
+        # manifest = round never happened).
         written: dict[str, StructType] = {}
 
         def _write(item):
@@ -511,7 +512,6 @@ class SnapshotStore:
                 os.path.join(rdir, name)
             )
 
-        t0 = _time.time()
         _write_wave([(n, df) for n, df in tables.items() if not callable(df)])
         remaining = {n: fn for n, fn in tables.items() if callable(fn)}
         while remaining:
@@ -529,7 +529,6 @@ class SnapshotStore:
             _write_wave(wave)
             for n, _ in wave:
                 del remaining[n]
-        self.last_commit_timings["writes_wall"] = round(_time.time() - t0, 3)
         lineage = {
             name: sorted(
                 f
@@ -539,9 +538,7 @@ class SnapshotStore:
             for name in tables
         }
         if callable(metrics):
-            t0 = _time.time()
             metrics = metrics(_read)
-            self.last_commit_timings["metrics"] = round(_time.time() - t0, 3)
         tmp = os.path.join(rdir, MANIFEST + ".tmp")
         with open(tmp, "w") as f:
             json.dump(

@@ -65,9 +65,9 @@ def crawl_size(pages: DataFrame) -> DataFrame:
     shuffle rows are one-column-each (others nulled), so total shuffle
     bytes match the sum of the per-stream shuffles; the scan count drops
     5×. The single-scan plan stays the default as the scale-correct
-    choice; the crossover is documented in BENCH.md. The robots/page
-    totals ride the same scan via the separate flagged aggregate joined
-    broadcast-style on the ≤126-row crawl dimension."""
+    choice (BENCH.md design decision "single-scan crawl_size"). The
+    robots/page totals ride the same scan via the separate flagged
+    aggregate joined broadcast-style on the ≤126-row crawl dimension."""
     flagged = with_flags(pages)
     totals = flagged.groupBy("crawl").agg(
         F.count("*").alias("fetches"),

@@ -61,12 +61,13 @@ def feature_bucket(
                 identical arithmetic exists in DuckDB, so the oracle
                 replays it; this is the exactness flavor.
       xxhash64  Spark's codegen 64-bit hash — the SCALE flavor: ~5x
-                cheaper than md5 over the same feature stream (measured,
-                BENCH.md) with the same uniformity, but engine-specific,
-                so it is benchmarked rather than oracle-compared. DSIR's
-                semantics are hash-agnostic (any uniform bucket hash
-                estimates the same distributions), so production runs
-                xxhash64 and correctness is proven on the md5 flavor.
+                cheaper than md5 over the same feature stream (BENCH.md
+                design decision "DSIR xxhash64 flavor") with the same
+                uniformity, but engine-specific, so it is benchmarked
+                rather than oracle-compared. DSIR's semantics are
+                hash-agnostic (any uniform bucket hash estimates the
+                same distributions), so production runs xxhash64 and
+                correctness is proven on the md5 flavor.
     """
     if hasher == "xxhash64":
         return F.pmod(F.xxhash64(feat), F.lit(n_buckets)).cast("int")

@@ -129,8 +129,14 @@ def build_site(
                 "sha256": _sha256(os.path.join(out_dir, rel_html)),
             }
             rel_csv = f"data/{name}-percentage.csv"
+            # percent at %.4f like the reference's save_data_percentage;
+            # the pivot itself stays in exact micro-percent integers
+            piv = percentage_pivot(counts, name)
             write_csv(
-                percentage_pivot(counts, name),
+                piv.select(name, *[
+                    (F.col(f"`{c}`") / 10_000).alias(c)
+                    for c in piv.columns if c != name
+                ]),
                 os.path.join(out_dir, rel_csv),
             )
             files[rel_csv] = {

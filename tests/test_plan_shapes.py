@@ -70,9 +70,10 @@ def test_tld_dim_join_broadcasts(spark):
 
 def test_crawl_size_expand_not_per_distinct_scans(spark):
     """A8's four countDistincts ride ONE aggregate via Catalyst Expand
-    (BENCH.md crossover) instead of four per-column scan branches. The
-    synthetic pages view itself is a 3-branch union, so the total scan
-    count must be exactly 2 view-reads (totals + distincts), not 5."""
+    (BENCH.md design decision "single-scan crawl_size") instead of four
+    per-column scan branches. The synthetic pages view itself is a
+    3-branch union, so the total scan count must be exactly 2 view-reads
+    (totals + distincts), not 5."""
     base = pages_df(spark, SF)._jdf.queryExecution().executedPlan()
     base_scans = base.toString().count("FileScan parquet")
     plan = _executed(Q.QUERIES["crawl_size"](spark, SF))

@@ -64,3 +64,23 @@ def test_percentage_html_is_tablesorter(built):
     cells = re.findall(r"<td>([\d.,]+)</td>", html)
     assert cells and all("." in c and len(c.split(".")[1]) == 4
                          for c in cells)
+
+
+def test_percentage_csv_in_percent(built):
+    """The percentage CSVs hold percent of the crawl's pages at %.4f, as
+    the reference's save_data_percentage writes them: each crawl column
+    sums to 100 less at most the flooring (1e-4 per row)."""
+    import pandas as pd
+
+    out, _ = built
+    for name in ("mimetypes", "charsets", "languages"):
+        path = os.path.join(out, "data", f"{name}-percentage.csv")
+        df = pd.read_csv(path).set_index(name)
+        for crawl, col in df.items():
+            total = col.fillna(0).sum()
+            assert 100 - 1e-4 * len(col) - 1e-9 <= total <= 100 + 1e-9, (
+                name, crawl, total)
+        with open(path) as f:
+            first = f.read().splitlines()[1]
+        assert all(len(v.split(".")[1]) == 4 for v in first.split(",")[1:]
+                   if v), first

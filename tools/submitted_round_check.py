@@ -9,7 +9,7 @@ executes the exact same engine, not a lucky import path.
 
 Prints one JSON line: {"submitted_sec": ..., "inprocess_sec": ...,
 "rounds": N, "bit_identical": true} and exits nonzero on any mismatch.
-Recorded per round in BENCH.md ("spark-submit path" section).
+The last result is kept in BENCH.md ("Current state").
 """
 
 from __future__ import annotations
