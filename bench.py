@@ -1,12 +1,23 @@
-"""Headline benchmark. Prints ONE JSON line:
+"""Headline benchmark, and the one home of the timing protocol.
+Prints ONE JSON line:
 
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Workload: the crawl-statistics headline queries plus one frontier
-scheduling round, over a deterministically scaled pages universe derived
-from $SPARK_GRAFT_SF_DIR/documents.parquet (default /root/testdata/sf0.1,
-scaled ×BENCH_FACTOR to ~1.5M fetch rows — the sandbox stand-in for the
-100 TB table; all plans are the same shape they'd have at scale).
+Workload: the crawl-statistics headline queries (``HEADLINE``) plus one
+frontier scheduling round, over a deterministically scaled pages universe
+derived from $SPARK_GRAFT_SF_DIR/documents.parquet (default
+/root/testdata/sf0.1, scaled ×BENCH_FACTOR to ~1.5M fetch rows — the
+sandbox stand-in for the 100 TB table; all plans are the same shape
+they'd have at scale).
+
+Set-up, untimed but for ``generate_pages``: the scaled pages table, then
+a seed round plus round 1 into one bootstrap snapshot store. The frontier
+phase is round 2 on a fresh copy of that store, so every rep does
+identical work.
+
+One timing protocol (``time_phases``, shared with tools/ladder.py): one
+untimed warm-up rep, then ``REPS`` timed reps, with the phase loop inside
+the rep loop so phases interleave; each phase reports its minimum.
 
 Runs on local[$SPARK_GRAFT_CPUS] (default 32). Scaling-efficiency evidence
 (the same job at pinned CPU levels) comes from tools/ladder.py.
@@ -16,13 +27,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession
 
+from cc_crawl_statistics_spark.frontier import scheduler
+from cc_crawl_statistics_spark.frontier.state import SnapshotStore
 from cc_crawl_statistics_spark.operators import counts as C
 from cc_crawl_statistics_spark.operators import timeseries as TS
 from cc_crawl_statistics_spark.session import get_spark
@@ -31,7 +46,12 @@ from cc_crawl_statistics_spark.synth import pages_view_sql, scaled_documents_sql
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 FACTOR = int(os.environ.get("BENCH_FACTOR", "200"))
-REPS = int(os.environ.get("BENCH_REPS", "3"))
+# one shot on a shared VM mixes machine noise into the number (three reps
+# of one pure-compute loop once took 64.5 s / 2.5 s / 10.2 s) and the
+# first rep pays compilation and cold caches (4.4 s against a 1.17 s
+# floor): min of REPS after WARMUP reports the plan's cost
+WARMUP = 1
+REPS = 3
 
 # Scratch for the generated pages table, the frontier snapshot store and
 # Spark's shuffle/local dirs: tmpfs when available. The bench measures plan
@@ -39,9 +59,7 @@ REPS = int(os.environ.get("BENCH_REPS", "3"))
 # adds multi-second noise per write-heavy stage (measured: identical plans
 # 4.4s vs 10.7s back-to-back).
 SCRATCH = "/dev/shm" if os.path.isdir("/dev/shm") else None
-
-
-HOST_POOL = int(os.environ.get("BENCH_HOST_POOL", "40000"))
+HOST_POOL = 40000
 
 
 def materialize_scaled_pages(
@@ -263,49 +281,64 @@ def _outlink_host_graph(pages):
     return LG.host_link_graph(LG.page_outlinks(linked))
 
 
-def bench_frontier(spark: SparkSession, pages) -> tuple[float, int]:
-    """Seed + one full scheduling round over the scaled universe.
-    Returns (seconds for the scheduling round, urls_scheduled)."""
-    import shutil
-    import tempfile
+def query_phases(pages, names=tuple(HEADLINE)) -> dict:
+    """``time_phases`` phases for the named ``HEADLINE`` queries."""
+    return {
+        n: (lambda q=HEADLINE[n]: lambda: force(q(pages))) for n in names
+    }
 
-    from cc_crawl_statistics_spark.frontier import scheduler
-    from cc_crawl_statistics_spark.frontier.state import SnapshotStore
 
-    root = tempfile.mkdtemp(prefix="bench_frontier_", dir=SCRATCH)
-    store = SnapshotStore(root)
-    try:
-        # seed + round 1 untimed (cold caches, store bootstrap); the metric
-        # is the best steady-state scheduling round of REPS (same noise
-        # rationale as the headline queries)
-        scheduler.run_round(spark, store, SF_DIR, n_partitions=CPUS, pages=pages)
-        dt = float("inf")
-        for _ in range(REPS):
-            t0 = time.time()
-            metrics = scheduler.run_round(
-                spark, store, SF_DIR, n_partitions=CPUS, pages=pages
-            )
-            dt = min(dt, time.time() - t0)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return dt, metrics["n_scheduled"]
+def bootstrap_store(spark: SparkSession, store_dir: str, pages, cores: int):
+    """Seed + round 1 into a new store at ``store_dir`` (set-up, untimed)."""
+    scheduler.run_round(
+        spark, SnapshotStore(store_dir), SF_DIR, n_partitions=cores,
+        pages=pages,
+    )
+
+
+def fresh_round(spark: SparkSession, bootstrap: str, work: str, cores: int):
+    """The frontier phase: each ``prepare()`` copies the bootstrap store to
+    ``work`` (outside the timed span) and returns the thunk that runs
+    round 2 on the copy, so every rep schedules the same URLs."""
+
+    def prepare():
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.copytree(bootstrap, work)
+        return lambda: scheduler.run_round(
+            spark, SnapshotStore(work), SF_DIR, n_partitions=cores
+        )
+
+    return prepare
+
+
+def time_phases(phases: dict) -> tuple[dict, dict]:
+    """The timing protocol. ``phases`` maps a name to ``prepare()``, which
+    does the untimed set-up and returns the thunk to time. Runs WARMUP
+    untimed reps then REPS timed ones, every phase once per rep (phases
+    interleave). Returns (min seconds per phase, last result per phase)."""
+    best = dict.fromkeys(phases, float("inf"))
+    last = {}
+    for rep in range(WARMUP + REPS):
+        for name, prepare in phases.items():
+            thunk = prepare()
+            t0 = time.perf_counter()
+            last[name] = thunk()
+            if rep >= WARMUP:
+                best[name] = min(best[name], time.perf_counter() - t0)
+    return best, last
 
 
 def main() -> None:
-    import shutil
-    import tempfile
-
+    tmp = tempfile.mkdtemp(prefix="bench_", dir=SCRATCH)
     extra_conf = {"spark.ui.showConsoleProgress": "false"}
     if SCRATCH:
-        local_dir = tempfile.mkdtemp(prefix="bench_spark_local_", dir=SCRATCH)
-        extra_conf["spark.local.dir"] = local_dir
+        extra_conf["spark.local.dir"] = os.path.join(tmp, "local")
     spark = get_spark(
         app_name="bench",
         cores=CPUS,
         shuffle_partitions=CPUS,
         extra_conf=extra_conf,
     )
-    tmp = tempfile.mkdtemp(prefix="bench_pages_", dir=SCRATCH)
     times: dict[str, float] = {}
     t0 = time.time()
     pages = materialize_scaled_pages(
@@ -313,20 +346,14 @@ def main() -> None:
     )
     times["generate_pages"] = round(time.time() - t0, 3)
     n_rows = pages.count()
-    # best-of-REPS per query: a single-shot measurement on a shared VM mixes
-    # machine-state noise into every number (round-3 VM: three reps of an
-    # identical pure-compute loop measured 64.5s / 2.5s / 10.2s — 25x
-    # spread); min-of-N reports the plan's actual cost
-    for name, qf in HEADLINE.items():
-        best = float("inf")
-        for _ in range(REPS):
-            t0 = time.time()
-            force(qf(pages))
-            best = min(best, time.time() - t0)
-        times[name] = round(best, 3)
-
-    t_frontier, n_sched = bench_frontier(spark, pages)
-    times["frontier_round"] = round(t_frontier, 3)
+    store = os.path.join(tmp, "store")
+    bootstrap_store(spark, store, pages, CPUS)
+    best, last = time_phases({
+        **query_phases(pages),
+        "frontier_round": fresh_round(spark, store, store + "_rep", CPUS),
+    })
+    times.update({k: round(v, 3) for k, v in best.items()})
+    n_sched = last["frontier_round"]["n_scheduled"]
 
     total = round(sum(times.values()), 3)
     out = {
@@ -342,7 +369,7 @@ def main() -> None:
         "bench_factor": FACTOR,
         "cpus": CPUS,
         "frontier_urls_scheduled": n_sched,
-        "frontier_urls_per_sec": round(n_sched / t_frontier, 1),
+        "frontier_urls_per_sec": round(n_sched / best["frontier_round"], 1),
     }
     spark.stop()
     shutil.rmtree(tmp, ignore_errors=True)

@@ -39,18 +39,6 @@ def crawl_date(crawl_name: str) -> dt.date:
     return dt.date.fromisocalendar(int(year), int(week), 1)
 
 
-def crawl_dim(spark: SparkSession, crawl_names: list[str]) -> DataFrame:
-    """(crawl, crawl_id, date) — ids are the sort order by (year, week).
-    (For fixture crawls not in the production registry only ordering
-    stability matters; for registered CC-MAIN names use
-    monthly_crawl_dim, whose ids match the reference bit-for-bit.)"""
-    rows = [
-        (name, i, crawl_date(name))
-        for i, name in enumerate(sorted(set(crawl_names)))
-    ]
-    return spark.createDataFrame(rows, "crawl string, crawl_id int, date date")
-
-
 def monthly_crawl_dim(spark: SparkSession) -> DataFrame:
     """The reference's MonthlyCrawl registry (crawlstats.py:35-167) as a
     broadcast dim: (crawl, crawl_id, date). Ids are REGISTRATION order —

@@ -88,15 +88,25 @@ class SnapshotStore:
     def _round_dir(self, rnd: int) -> str:
         return os.path.join(self.root, f"round={rnd:04d}")
 
+    def _base_round(self, name: str, upto_rnd: int) -> int | None:
+        """Highest round ≤ upto_rnd whose directory holds ``name``."""
+        for r in range(upto_rnd, -1, -1):
+            if os.path.exists(os.path.join(self._round_dir(r), name)):
+                return r
+        return None
+
+    def _round_paths(self, name: str, lo: int, hi: int) -> dict[int, str]:
+        """Round → path of table ``name`` for the rounds lo..hi that hold
+        it, in round order."""
+        paths = {r: os.path.join(self._round_dir(r), name)
+                 for r in range(lo, hi + 1)}
+        return {r: p for r, p in paths.items() if os.path.exists(p)}
+
     def _schemas(self, rnd: int) -> dict:
         """The ``schemas`` entry of the newest committed manifest at or
         below round ``rnd`` ({} when there is none)."""
-        for r in range(rnd, -1, -1):
-            path = os.path.join(self._round_dir(r), MANIFEST)
-            if os.path.exists(path):
-                with open(path) as f:
-                    return json.load(f)["schemas"]
-        return {}
+        r = self._base_round(MANIFEST, rnd)
+        return {} if r is None else self.manifest(r)["schemas"]
 
     def _schema(self, kind: str, rnd: int) -> StructType:
         schemas = self._schemas(rnd)
@@ -148,12 +158,7 @@ class SnapshotStore:
 
     def seen_base_round(self, upto_rnd: int) -> int | None:
         """Highest round ≤ upto_rnd holding a compacted url_seen_base."""
-        for r in range(upto_rnd, -1, -1):
-            if os.path.exists(
-                os.path.join(self._round_dir(r), "url_seen_base")
-            ):
-                return r
-        return None
+        return self._base_round("url_seen_base", upto_rnd)
 
     def read_seen(self, spark: SparkSession, upto_rnd: int) -> DataFrame:
         """The URL-seen set as of a round: the latest compacted base (if
@@ -169,24 +174,18 @@ class SnapshotStore:
         if base is not None:
             paths.append(os.path.join(self._round_dir(base), "url_seen_base"))
         start = 0 if base is None else base + 1
-        paths += [
-            os.path.join(self._round_dir(r), "url_seen_delta")
-            for r in range(start, upto_rnd + 1)
-        ]
-        seen = self._read(
-            spark, "url_seen_delta", upto_rnd,
-            *[p for p in paths if os.path.exists(p)],
-        )
+        paths += self._round_paths("url_seen_delta", start, upto_rnd).values()
+        seen = self._read(spark, "url_seen_delta", upto_rnd, *paths)
         # reopen lists: bounded per round (recrawl tiers), retired by the
         # next compaction (the rewritten base already excludes them).
         # Range starts AT the base round: a reopen filed after that
         # round's compaction must still apply; one filed before was
         # folded in, and re-applying is a no-op thanks to the
         # re-add guard below.
-        for r0 in range(max(start - 1, 0), upto_rnd + 1):
-            p = os.path.join(self._round_dir(r0), "url_seen_reopen")
-            if not os.path.exists(p):
-                continue
+        reopens = self._round_paths(
+            "url_seen_reopen", max(start - 1, 0), upto_rnd
+        )
+        for r0, p in reopens.items():
             rk = self._read(spark, "url_seen_delta", upto_rnd, p)
             # a key re-seen AFTER its reopen is seen again — keep it
             readd = self.read_seen_deltas(spark, r0 + 1, upto_rnd)
@@ -216,22 +215,15 @@ class SnapshotStore:
         """Just the per-round deltas in [from_rnd, upto_rnd] (used as the
         small anti-join side for Bloom-rejected candidates). Returns an
         empty seen-key relation when no deltas exist in the range."""
-        paths = [
-            os.path.join(self._round_dir(r), "url_seen_delta")
-            for r in range(from_rnd, upto_rnd + 1)
-        ]
-        paths = [p for p in paths if os.path.exists(p)]
+        paths = self._round_paths("url_seen_delta", from_rnd, upto_rnd)
         if not paths:
             return spark.createDataFrame([], "seen_key bigint")
-        return self._read(spark, "url_seen_delta", upto_rnd, *paths)
+        return self._read(spark, "url_seen_delta", upto_rnd, *paths.values())
 
     def frontier_base_round(self, upto_rnd: int) -> int | None:
         """Highest round ≤ upto_rnd holding a materialized full frontier
         (the seed round or a compaction rewrite)."""
-        for r in range(upto_rnd, -1, -1):
-            if os.path.exists(os.path.join(self._round_dir(r), "frontier")):
-                return r
-        return None
+        return self._base_round("frontier", upto_rnd)
 
     def read_frontier(
         self,
@@ -272,27 +264,19 @@ class SnapshotStore:
         cur = self.read(spark, base, "frontier").withColumn(
             "_src_rnd", F.lit(base)
         )
-        deltas = [
-            os.path.join(self._round_dir(r), "frontier_delta")
-            for r in range(base + 1, upto_rnd + 1)
-        ]
-        deltas = [p for p in deltas if os.path.exists(p)]
+        deltas = self._round_paths("frontier_delta", base + 1, upto_rnd)
         if deltas:
             cur = cur.unionByName(
                 self._read(
-                    spark, "frontier_delta", upto_rnd, *deltas
+                    spark, "frontier_delta", upto_rnd, *deltas.values()
                 ).withColumn("_src_rnd", rnd_of_path)
             )
         retired = []
         for t in ("schedule", "blocked"):
-            paths = [
-                os.path.join(self._round_dir(r), t)
-                for r in range(base + 1, upto_rnd + 1)
-            ]
-            paths = [p for p in paths if os.path.exists(p)]
+            paths = self._round_paths(t, base + 1, upto_rnd)
             if paths:
                 retired.append(
-                    self._read(spark, t, upto_rnd, *paths).select(
+                    self._read(spark, t, upto_rnd, *paths.values()).select(
                         "url", rnd_of_path.alias("_ret_rnd")
                     )
                 )
@@ -575,11 +559,10 @@ def round_trajectory(spark: SparkSession, store: "SnapshotStore") -> DataFrame:
     surface as NULL, never KeyError)."""
     latest = store.latest_round()
     rows = []
-    for rnd in range(0, (latest or 0) + 1):
-        try:
-            m = dict(store.manifest(rnd).get("metrics", {}))
-        except FileNotFoundError:
-            continue  # expired round: manifest retained normally, but be lenient
+    # expire_rounds never deletes a manifest, so every round up to the
+    # latest has one; a missing one is a damaged store and raises
+    for rnd in range(0 if latest is None else latest + 1):
+        m = dict(store.manifest(rnd).get("metrics", {}))
         sched = m.get("n_scheduled")
         new = m.get("n_discovered_new")
         rows.append(

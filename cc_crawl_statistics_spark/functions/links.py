@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, StringType
+from pyspark.sql.types import BinaryType, StringType
 
 from .extract import synth_html_bytes
 
@@ -147,7 +147,3 @@ def resolve_href_udf(base_url: pd.Series, href: pd.Series) -> pd.Series:
                 else None
             )
     return pd.Series(out, dtype=object)
-
-
-def parse_outlinks_udf_schema() -> ArrayType:
-    return ArrayType(StringType())

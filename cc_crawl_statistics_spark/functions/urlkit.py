@@ -69,19 +69,6 @@ def urlparse_host():
 
 
 @functools.lru_cache(maxsize=None)
-def urlparse_scheme():
-    @pandas_udf("string")
-    def _scheme(urls: pd.Series) -> pd.Series:
-        from urllib.parse import urlparse
-
-        return urls.map(
-            lambda u: urlparse(u).scheme.lower() if u is not None else None
-        )
-
-    return _scheme
-
-
-@functools.lru_cache(maxsize=None)
 def surt_key():
     """SURT (Sort-friendly URI Reordering Transform) canonical key:
     'tld,domain,...,sub)path?query' — host labels reversed, scheme and
@@ -111,11 +98,6 @@ def surt_key():
         return urls.map(one)
 
     return _surt
-
-
-def surt_domain_of(surt_key_col):
-    """SURT domain = the part before ')' (crawlstats.py:777)."""
-    return F.substring_index(surt_key_col, ")", 1)
 
 
 # the URL-seen key (xxhash64 over the canonical form) lives with its

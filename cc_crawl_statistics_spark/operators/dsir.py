@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .lm import SCALE, _words
 
-__all__ = ["feature_bucket", "hashed_features", "dsir_weights"]
+__all__ = ["feature_bucket", "dsir_weights"]
 
 
 def _hexval(h: Column, i: int) -> Column:
@@ -106,21 +106,6 @@ def bucket_arrays(
             F.concat(w, bg),
             lambda f: feature_bucket(f, n_buckets, hasher).cast("int"),
         ).alias("buckets"),
-    )
-
-
-def hashed_features(
-    docs: DataFrame, text_col: str = "text", n_buckets: int = 1024
-) -> DataFrame:
-    """(doc_id, bucket, cnt) per-document bucket counts — the bag-of-
-    hashed-n-grams view. Kept for callers that want the doc×bucket matrix
-    at dimension scale; dsir_weights itself stays on the per-feature form
-    (see module docstring for the memory-shape rationale)."""
-    return (
-        bucket_arrays(docs, text_col, n_buckets)
-        .select("doc_id", F.explode("buckets").alias("bucket"))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count("*").cast("long").alias("cnt"))
     )
 
 

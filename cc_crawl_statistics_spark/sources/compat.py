@@ -21,7 +21,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # count-vector codec (pure functions; unit-tested against the reference's
@@ -88,14 +87,6 @@ def emit_stats_lines(stats: DataFrame) -> DataFrame:
         .sortWithinPartitions("type", "key", "crawl")
         .mapInPandas(fmt, "line string")
     )
-
-
-def write_stats_file(stats: DataFrame, path: str) -> None:
-    """Single gzip part of JSON\\tJSON lines — the reference's stats sink
-    (crawlstats.py:1044-1055; one reducer → one file)."""
-    emit_stats_lines(stats).coalesce(1).write.mode("overwrite").option(
-        "compression", "gzip"
-    ).text(path)
 
 
 def read_stats_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:

@@ -649,14 +649,3 @@ def render_figure(spec: FigureSpec, img_path: str, dpi: int = 120):
     fig.savefig(img_path, dpi=dpi, bbox_inches="tight")
     plt.close(fig)
     return img_path
-
-
-def render_all(spark: SparkSession, sf_dir: str, out_dir: str) -> list[str]:
-    """Build and render every figure under ``out_dir`` (reference layout:
-    plots/<name>.png). Raises NotImplementedError without matplotlib."""
-    paths = []
-    for spec in build_figures(spark, sf_dir):
-        paths.append(
-            render_figure(spec, os.path.join(out_dir, spec.name + ".png"))
-        )
-    return paths

@@ -123,25 +123,3 @@ def decode_size_estimate_line(line: str) -> tuple[str, str, RefHLL]:
     key, val = line.split("\t", 1)
     _typ, item_type, crawl = json.loads(key)
     return item_type, crawl, RefHLL.from_json_dict(json.loads(val))
-
-
-def size_estimate_lines(pages_pdf_iter, value_cols=("url", "digest")):
-    """Arrow-batched builder for the export edge: iterate pandas batches of
-    (crawl, url, digest), maintain one RefHLL per (crawl, col), return the
-    wire lines. Used via mapInPandas/applyInPandas at fixture scale —
-    beyond fixture scale the engine's native sketches (hll_sketch_agg) are
-    the source of truth and this emitter is only structure-compat."""
-    sketches: dict[tuple[str, str], RefHLL] = {}
-    for pdf in pages_pdf_iter:
-        for crawl, group in pdf.groupby("crawl"):
-            for col in value_cols:
-                key = (str(crawl), col)
-                hll = sketches.get(key)
-                if hll is None:
-                    hll = sketches[key] = RefHLL(0.01)
-                for v in group[col].dropna().unique():
-                    hll.add(str(v))
-    return [
-        encode_size_estimate_line(col, crawl, hll)
-        for (crawl, col), hll in sorted(sketches.items())
-    ]

@@ -40,11 +40,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Common-Crawl-style pages fact table (FIXTURES.md §1), derived
     deterministically from ``documents`` (see synth.PAGES_SQL)."""

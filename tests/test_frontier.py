@@ -897,6 +897,27 @@ def test_round_trajectory_matches_manifests(spark, store):
         assert r.discovery_permille == (
             m["n_discovered_new"] * 1000 // m["n_scheduled"]
         )
+    # expire_rounds never deletes a manifest, so a round below the latest
+    # without one is a damaged store: the trajectory raises, not skips
+    os.remove(os.path.join(store.root, "round=0002", MANIFEST))
+    assert store.latest_round() == 3
+    with pytest.raises(FileNotFoundError):
+        round_trajectory(spark, store)
+
+
+def test_bench_frontier_phase_repeats_round_2(spark, tmp_path):
+    """bench.fresh_round copies the bootstrap store per rep, so every run
+    of its thunk is round 2 with identical metrics."""
+    import bench
+    from cc_crawl_statistics_spark.sources.tables import pages_df
+
+    boot = str(tmp_path / "boot")
+    bench.bootstrap_store(spark, boot, pages_df(spark, SF_SMOKE), 4)
+    prepare = bench.fresh_round(spark, boot, str(tmp_path / "rep"), 4)
+    runs = [prepare()() for _ in range(3)]
+    assert runs[0]["round"] == 2 and runs[0]["n_scheduled"] > 0
+    assert runs[1] == runs[0] and runs[2] == runs[0]
+    assert SnapshotStore(boot).latest_round() == 1
 
 
 def test_enforce_robots_paths_bit_for_bit(spark, store):

@@ -1,7 +1,10 @@
-"""tools/ladder.py without Spark: span arithmetic and the level check."""
+"""tools/ladder.py and bench.py's shared timing protocol without a Spark
+session: span arithmetic, the level check and ``bench.time_phases`` over
+fake phases on a fake clock."""
 
 import pytest
 
+import bench
 from tools import ladder
 
 
@@ -64,3 +67,68 @@ def test_args_defaults_and_validation():
     assert ladder.parse_args(["200", "1,2,4"]) == (200, [1, 2, 4])
     with pytest.raises(SystemExit):
         ladder.parse_args(["200", "0,2"])
+
+
+class _Clock:
+    """Stands in for the ``time`` module inside ``bench.time_phases``."""
+
+    def __init__(self):
+        self.t = 0.0
+
+    def perf_counter(self):
+        return self.t
+
+
+def _fake_phases(clock, log, secs):
+    """Phase ``name`` takes ``secs[name][i]`` seconds on its i-th run; its
+    prepare() takes 1000 s, which the timer must not see."""
+
+    def phase(name):
+        runs = iter(secs[name])
+
+        def prepare():
+            log.append(f"prepare {name}")
+            clock.t += 1000.0
+            n = next(runs)
+
+            def thunk():
+                log.append(f"run {name}")
+                clock.t += n
+                return n
+
+            return thunk
+
+        return prepare
+
+    return {name: phase(name) for name in secs}
+
+
+def test_time_phases_excludes_warmup_and_takes_min_of_three(monkeypatch):
+    clock, log = _Clock(), []
+    monkeypatch.setattr(bench, "time", clock)
+    assert (bench.WARMUP, bench.REPS) == (1, 3)
+    # the warm-up rep is the fastest run of A and the slowest of B
+    best, last = bench.time_phases(
+        _fake_phases(clock, log, {"A": [1, 5, 3, 4], "B": [90, 7, 8, 6]})
+    )
+    assert best == {"A": 3, "B": 6}
+    assert last == {"A": 4, "B": 6}
+
+
+def test_time_phases_interleaves_and_prepares_outside_the_span(monkeypatch):
+    clock, log = _Clock(), []
+    monkeypatch.setattr(bench, "time", clock)
+    best, _ = bench.time_phases(
+        _fake_phases(clock, log, {"A": [2] * 4, "B": [3] * 4})
+    )
+    assert log == [
+        "prepare A", "run A", "prepare B", "run B",
+    ] * (bench.WARMUP + bench.REPS)
+    # each prepare() advanced the clock by 1000 s before its timed span
+    assert best == {"A": 2, "B": 3}
+
+
+def test_ladder_counts_phases_come_from_the_headline_table():
+    assert len(ladder.COUNTS) == 5
+    assert set(ladder.COUNTS) <= set(bench.HEADLINE)
+    assert list(bench.query_phases(None, ladder.COUNTS)) == list(ladder.COUNTS)

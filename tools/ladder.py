@@ -21,9 +21,9 @@ is the core count. The timed phases are:
                   platform's own scaling ceiling: on SMT hosts the vCPUs
                   past the physical cores add little for high-IPC code)
 
-One timing protocol: per phase one untimed warm-up rep, then three timed
-reps, with the phase loop inside the rep loop so phases interleave; each
-phase reports its minimum. Prints one JSON line: per-level phase seconds,
+Set-up, the ``counts`` and frontier phases and the timing protocol
+(``bench.time_phases``: one warm-up rep, then the min of three, phases
+interleaved) are bench.py's. Prints one JSON line: per-level phase seconds,
 rows/s over the counts phases, frontier URLs/s, and for each pair of
 consecutive levels the speedup and efficiency (speedup ÷ level ratio) of
 every phase and rate. A level above the host's CPU count is refused
@@ -43,8 +43,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-WARMUP = 1
-REPS = 3
+COUNTS = ("crawl_size", "host_counts", "url_fetch_histogram",
+          "url_crawl_set", "mimetype")
 # sized with the data so the loop, not job scheduling, sets its time:
 # factor 200 takes seconds at one core, factor 16000 seconds at 32
 CALIBRATION_ROWS_PER_FACTOR = 500_000
@@ -108,29 +108,21 @@ def _session(app_name: str, cores: int, scratch: str):
 
 def setup(factor: int, cores: int, root: str) -> None:
     """Write ``root/pages`` and the bootstrap store ``root/store``."""
-    from bench import SF_DIR, materialize_scaled_pages
-    from cc_crawl_statistics_spark.frontier import scheduler
-    from cc_crawl_statistics_spark.frontier.state import SnapshotStore
+    from bench import SF_DIR, bootstrap_store, materialize_scaled_pages
 
     spark = _session("ladder-setup", cores, root)
     try:
         pages = materialize_scaled_pages(
             spark, SF_DIR, factor, os.path.join(root, "pages"), cores
         )
-        scheduler.run_round(
-            spark, SnapshotStore(os.path.join(root, "store")), SF_DIR,
-            n_partitions=cores, pages=pages,
-        )
+        bootstrap_store(spark, os.path.join(root, "store"), pages, cores)
     finally:
         spark.stop()
 
 
 def worker(cpus: int, factor: int, root: str) -> dict:
     """Time every phase at ``cpus`` cores; returns this level's record."""
-    from bench import SF_DIR, force
-    from cc_crawl_statistics_spark.frontier import scheduler
-    from cc_crawl_statistics_spark.frontier.state import SnapshotStore
-    from cc_crawl_statistics_spark.operators import counts as C
+    from bench import force, fresh_round, query_phases, time_phases
 
     spark = _session(f"ladder-{cpus}", cpus, tempfile.mkdtemp(dir=root))
     pages = spark.read.parquet(os.path.join(root, "pages"))
@@ -138,28 +130,13 @@ def worker(cpus: int, factor: int, root: str) -> dict:
     ids = spark.range(
         factor * CALIBRATION_ROWS_PER_FACTOR, numPartitions=max(cpus * 8, 64)
     )
-    counts = {
-        "crawl_size": C.crawl_size,
-        "host_counts": C.host_counts,
-        "url_fetch_histogram": C.url_fetch_histogram,
-        "url_crawl_set": C.url_crawl_set,
-        "mimetype": C.mimetype_counts,
-    }
     store_dir = os.path.join(root, f"store_{cpus}")
-
-    def fresh_round():
-        # the copy is set-up, outside the timed thunk
-        shutil.rmtree(store_dir, ignore_errors=True)
-        shutil.copytree(os.path.join(root, "store"), store_dir)
-        return lambda: scheduler.run_round(
-            spark, SnapshotStore(store_dir), SF_DIR, n_partitions=cpus
-        )
-
     phases = {
         "scan": lambda: lambda: force(pages),
-        **{n: (lambda op=op: lambda: force(op(pages)))
-           for n, op in counts.items()},
-        "frontier_round": fresh_round,
+        **query_phases(pages, COUNTS),
+        "frontier_round": fresh_round(
+            spark, os.path.join(root, "store"), store_dir, cpus
+        ),
         # a new DataFrame per rep: collecting the same one again reuses
         # its materialized shuffle stage and times nothing
         "calibration": lambda: ids.selectExpr(
@@ -167,25 +144,17 @@ def worker(cpus: int, factor: int, root: str) -> dict:
             " + shiftright(id, 7)) s"
         ).collect,
     }
-    best = dict.fromkeys(phases, float("inf"))
-    last = {}
-    for rep in range(WARMUP + REPS):
-        for name, prepare in phases.items():
-            thunk = prepare()
-            t0 = time.perf_counter()
-            last[name] = thunk()
-            if rep >= WARMUP:
-                best[name] = min(best[name], time.perf_counter() - t0)
+    best, last = time_phases(phases)
     spark.stop()
     shutil.rmtree(store_dir, ignore_errors=True)
     n_sched = last["frontier_round"]["n_scheduled"]
-    counts_s = sum(best[n] for n in counts)
+    counts_s = sum(best[n] for n in COUNTS)
     return {
         "rows": n_rows,
         "urls_scheduled": n_sched,
         "phases": {k: round(v, 3) for k, v in best.items()},
         "rates": {
-            "rows_per_s": round(n_rows * len(counts) / counts_s),
+            "rows_per_s": round(n_rows * len(COUNTS) / counts_s),
             "urls_per_s": round(n_sched / best["frontier_round"]),
         },
     }
