@@ -11,7 +11,8 @@ semantics:
 
   - :func:`token_bucket_gate` — batch: one `groupBy(host)` + a JVM
     ``aggregate`` fold over the time-ordered per-host event array. No
-    Python in the plan; the fold is whole-stage-codegen'd.
+    Python in the plan; the fold runs interpreted (``aggregate`` is a
+    ``CodegenFallback`` expression inside the generated stage).
   - :func:`token_bucket_stream` — streaming: ``applyInPandasWithState``
     keyed by host, the bucket (tokens, last_ts) as group state.
 
@@ -112,7 +113,8 @@ def token_bucket_gate(
     tests/test_politeness.py):
 
     - ``impl="fold"`` (default): JVM ``aggregate`` over the sorted
-      per-host array — whole-stage codegen, zero Python. The array
+      per-host array — zero Python, the fold interpreted
+      (``CodegenFallback``). The array
       append inside the fold copies the accumulator, so work per host is
       O(n²) in its event count: right for politeness-bounded hosts
       (n ≲ 10⁴), wrong for pathological ones.

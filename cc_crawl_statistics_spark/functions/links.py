@@ -85,10 +85,11 @@ _ANCHOR_PATTERN = r'<a href="[^"]*"[^>]*>[^<]*</a>'
 def parse_anchors_col(html: Column) -> Column:
     """array<struct<href,text>> of anchors WITH their anchor text — the
     web-graph signal ranking/training pipelines aggregate per target.
-    Still pure codegen: regexp_extract_all pulls whole ``<a …>text</a>``
+    regexp_extract_all (generated code) pulls whole ``<a …>text</a>``
     spans (one capture group per call is the engine limit), then a
-    higher-order transform re-extracts the two fields per element — no
-    Python, no explode here (callers explode after pruning the blob)."""
+    higher-order transform re-extracts the two fields per element — it
+    runs interpreted (``CodegenFallback``); no Python, no explode here
+    (callers explode after pruning the blob)."""
     page = F.decode(html, "UTF-8")
     anchors = F.regexp_extract_all(page, F.lit(_ANCHOR_PATTERN), F.lit(0))
     return F.transform(

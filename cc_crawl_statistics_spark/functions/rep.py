@@ -10,9 +10,11 @@ and ``rel=canonical`` redirects dedup credit to the canonical capture
 (the reference's upstream crawler, Nutch, implements all three; the
 reference repo itself only sees their downstream effect in CDX counts).
 
-Parsing is pure codegen — regexp over the decoded html, same tier as
-functions/links.py: at 100 TB these run inside WholeStageCodegen in the
-single stage that touches the html blob, and everything downstream
+Parsing is regexp over the decoded html, same tier as functions/links.py:
+at 100 TB these run inside WholeStageCodegen in the single stage that
+touches the html blob (the directive-token split and the per-anchor field
+re-extraction are higher-order ``transform``s, which run interpreted
+there — ``CodegenFallback``), and everything downstream
 carries only slim booleans/strings. The recognized shape is the fixture
 generator's canonical serialization (attribute order as emitted by
 ``synth_rep_html_bytes``); a production deployment widens the regexps to

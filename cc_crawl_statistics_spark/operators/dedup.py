@@ -1,15 +1,22 @@
 """Deduplication operators for large-scale training-data pipelines.
 
 All hot paths are JVM-side built-ins (xxhash64, array/higher-order
-functions) — no Python in the per-row loop. Scale notes per operator below;
-the common theme is: never materialize O(n²) pairs — candidates come from
-hash buckets (exact digest, LSH band, simhash prefix), and only bucket-local
-pairs are verified.
+functions) — no Python in the per-row loop. The higher-order functions
+(``transform``, ``zip_with``, ``aggregate``, ``filter``, ``array_sort``)
+run interpreted: they are ``CodegenFallback`` expressions, evaluated
+row by row outside the generated code of their stage. The unit kernels
+(split_units, unit_dedup, boilerplate_strip) use generated-code array
+expressions only (``explode``, ``slice``, ``concat_ws``,
+``sort_array``).
+
+Scale notes per operator below; the common theme is: never materialize
+O(n²) pairs — candidates come from hash buckets (exact digest, LSH band,
+simhash prefix), and only bucket-local pairs are verified.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -33,7 +40,8 @@ def with_word_shingles(
     docs: DataFrame, text_col: str, n: int = 3, out: str = "sh"
 ) -> DataFrame:
     """``docs`` plus a distinct n-word-shingle array column (JVM-side:
-    split + transform over a position sequence).
+    split + transform over a position sequence; the ``transform`` lambda
+    runs interpreted — ``CodegenFallback``).
 
     The words array is staged behind its own projection: higher-order
     functions evaluate non-lambda subexpressions per element, so inlining
@@ -66,8 +74,9 @@ def with_word_shingles(
 
 def minhash_signature(shingles_col, n_hashes: int = 64):
     """MinHash signature as an array<long>: for seed s, min over shingles of
-    xxhash64(shingle, s). Pure codegen — one pass over the shingle array per
-    seed, no UDF, no explode."""
+    xxhash64(shingle, s). JVM-side — one pass over the shingle array per
+    seed, no UDF, no explode — but each seed's ``transform`` runs
+    interpreted (``CodegenFallback``), not in generated code."""
     return F.array(
         *[
             F.array_min(
@@ -336,8 +345,8 @@ def embedding_near_dup(
     θ/π ≈ 0.045, so the miss probability per pair is
     (1 − 0.955⁴)⁸ ≈ 6·10⁻⁷ — and exact duplicates (angle 0) can never be
     split, so recall on planted exact copies is deterministic 1.0.
-    Verification: exact cosine in codegen (zip_with + aggregate) on the
-    candidate pairs only.
+    Verification: exact cosine (zip_with + aggregate, JVM-side but
+    interpreted — ``CodegenFallback``) on the candidate pairs only.
 
     Scale: the table explode and bucket self-join carry only
     (vec_id, table, bucket); vectors are joined back once per candidate
@@ -755,44 +764,53 @@ def split_units(
     unit_words: int = 16,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, *carry, pos, unit): tumbling ``unit_words``-word windows of
-    each document — the deterministic segmenter stand-in for the sentence/
-    paragraph units C4 (Raffel et al. 2020, "three-sentence span") and
-    RefinedWeb dedup at. Real corpora would split on sentence boundaries;
-    the unit-dedup semantics downstream are segmenter-agnostic.
+    """(doc_id, *carry, n_units, pos, unit): tumbling ``unit_words``-word
+    windows of each document — the deterministic segmenter stand-in for
+    the sentence/paragraph units C4 (Raffel et al. 2020, "three-sentence
+    span") and RefinedWeb dedup at. Real corpora would split on sentence
+    boundaries; the unit-dedup semantics downstream are
+    segmenter-agnostic.
 
-    All codegen: split + transform over a position sequence + slice. The
-    words array is staged behind its own projection (same CollapseProject
-    reasoning as with_word_shingles — inlining the split into the lambda
-    would re-split the text once per unit)."""
+    Array expressions only, no lambda: one row per unit position from
+    ``explode(sequence(...))``, then ``slice`` + ``concat_ws`` on that row
+    (a ``transform`` over the positions would run interpreted —
+    higher-order functions are ``CodegenFallback``). The words array is
+    staged behind its own projection below the generator, so each text
+    is split once, not once per unit."""
     words = F.col("_ud_words")
     n_units = F.ceil(F.size(words) / F.lit(unit_words)).cast("long")
     positions = F.when(n_units > 0, F.sequence(F.lit(0), n_units - 1)).otherwise(
         F.array().cast("array<bigint>")
     )
+    pos = F.col("pos")
     return (
         docs.withColumn("_ud_words", F.split(F.col(text_col), " "))
-        .withColumn("_ud_n_units", n_units)
         .select(
             "doc_id",
             *carry,
-            F.col("_ud_n_units").alias("n_units"),
-            F.posexplode(
-                F.transform(
-                    positions,
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.slice(
-                            words,
-                            (i * unit_words + 1).cast("int"),
-                            unit_words,
-                        ),
-                    ),
-                )
-            ).alias("pos", "unit"),
+            n_units.alias("n_units"),
+            words,
+            F.explode(positions).alias("pos"),
         )
-        .withColumn("pos", F.col("pos").cast("long"))
+        .select(
+            "doc_id",
+            *carry,
+            "n_units",
+            "pos",
+            F.concat_ws(
+                " ",
+                F.slice(words, (pos * unit_words + 1).cast("int"), unit_words),
+            ).alias("unit"),
+        )
     )
+
+
+def _in_position_order(pos_unit: Column) -> Column:
+    """Aggregate: the units of the collected (pos, unit) structs joined by
+    spaces in position order (NULL structs skipped; no unit gives "").
+    ``sort_array`` + the ``.unit`` field, not an ``array_sort``/
+    ``transform`` lambda."""
+    return F.array_join(F.sort_array(F.collect_list(pos_unit))["unit"], " ")
 
 
 def unit_dedup(
@@ -831,13 +849,7 @@ def unit_dedup(
     )
     rebuilt = kept.groupBy("doc_id").agg(
         F.count("*").alias("kept_units"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "unit"))),
-                lambda s: s["unit"],
-            ),
-            " ",
-        ).alias("new_text"),
+        _in_position_order(F.struct("pos", "unit")).alias("new_text"),
     )
     base = units.groupBy("doc_id").agg(F.max("n_units").alias("n_units"))
     zero = F.lit(0).cast("long")
@@ -874,17 +886,19 @@ def boilerplate_strip(
     Returns one row per input doc: (doc_id, n_units, kept_units,
     new_text).
 
-    Scale shape: units are materialized once (three consumers — the
-    frequency table, the anti-join probe, the per-doc totals;
-    localCheckpoint stops three corpus re-splits). The frequency pass is
-    a two-level (group, unit, doc) -> (group, unit) aggregation — map-side
-    partial distinct, no countDistinct Expand. The boilerplate table is
-    tiny relative to the corpus (groups x the few over-threshold units),
-    so the LEFT ANTI join's build side stays small; group totals are a
-    broadcast-sized dimension."""
-    units = split_units(
-        docs, text_col, unit_words, carry=(group_col,)
-    ).localCheckpoint(eager=False)
+    Scale shape: the units feed two consumers (the frequency table and
+    the rebuild) with no lineage cut: each re-splits the text in
+    generated code, which costs less than storing the exploded unit rows
+    (BENCH.md design decision "codegen text kernels"). The frequency pass
+    is a two-level (group, unit, doc) -> (group, unit) aggregation —
+    map-side partial distinct, no countDistinct Expand. The boilerplate
+    table is tiny relative to the corpus (groups x the few over-threshold
+    units), so the LEFT join that flags boilerplate units keeps a small
+    build side; group totals are a broadcast-sized dimension. One doc_id
+    aggregation over the flagged units yields n_units, kept_units and the
+    rebuilt text together, so every document with a unit comes back
+    without a second aggregation or a join."""
+    units = split_units(docs, text_col, unit_words, carry=(group_col,))
     group_sizes = docs.groupBy(group_col).agg(
         F.count("*").cast("long").alias("_g_docs")
     )
@@ -903,28 +917,18 @@ def boilerplate_strip(
                 >= min_share_permille * F.col("_g_docs")
             )
         )
-        .select(group_col, "unit")
+        .select(group_col, "unit", F.lit(True).alias("_boiler"))
     )
-    kept = units.join(boiler, [group_col, "unit"], "left_anti")
-    rebuilt = kept.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("kept_units"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "unit"))),
-                lambda s: s["unit"],
-            ),
-            " ",
-        ).alias("new_text"),
-    )
-    base = units.groupBy("doc_id").agg(F.max("n_units").alias("n_units"))
-    zero = F.lit(0).cast("long")
+    kept = F.col("_boiler").isNull()
     return (
-        base.join(rebuilt, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_units",
-            F.coalesce(F.col("kept_units"), zero).alias("kept_units"),
-            F.coalesce(F.col("new_text"), F.lit("")).alias("new_text"),
+        units.join(boiler, [group_col, "unit"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.max("n_units").alias("n_units"),
+            F.count(F.when(kept, 1)).cast("long").alias("kept_units"),
+            _in_position_order(F.when(kept, F.struct("pos", "unit"))).alias(
+                "new_text"
+            ),
         )
         .orderBy("doc_id")
     )

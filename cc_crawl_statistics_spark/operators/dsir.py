@@ -19,29 +19,37 @@ are integer sums of those. Bucket hashing is the portable md5 arithmetic
 (first 3 hex chars → 0..4095 → mod B), reproducible in both engines
 without engine-specific hash functions.
 
-Scale shape: feature strings are hashed to int buckets INSIDE the
-per-row array transform, so only (doc_id, bucket-int) pairs ever cross
-an exchange; the two distributions are B-row tables (B = 1024 default —
-kilobytes), so the weight table broadcasts and scoring is one
-broadcast-hash join plus a doc_id aggregation. There is deliberately NO
+Scale shape: each document's unigram and bigram features are exploded
+to rows and hashed to int buckets in the same whole-stage-generated
+stage that splits the text (array expressions only — see
+``bucket_rows``), so only (doc_id, bucket-int) pairs ever cross an
+exchange; the two distributions are B-row tables (B = 1024 default —
+kilobytes) built by ONE aggregation over both feature streams, each row
+tagged raw or target, with the corpus totals from a window over those B
+rows (no join of q and p, no totals cross join), so the weight table
+broadcasts and scoring is one broadcast-hash join plus a doc_id
+aggregation. There is deliberately NO
 per-(doc, bucket) pre-aggregation: the weight join is broadcast (no
 shuffle to shrink), and the doc×bucket hash-aggregate it would insert
 keeps ~|docs in partition|×|buckets touched| live keys per task — the
 one memory shape here that does NOT scale (measured: 1.14M-doc bench
 OOMs the execution pool through it, while the per-feature form's maps
 are bounded at B keys for q and |docs per partition| keys for scoring).
-The raw corpus's bucket arrays are materialized once (lazy
-localCheckpoint) and reused by the q pass and the scoring pass.
+The raw corpus's feature rows are derived twice, once for the q pass
+and once for scoring, with no lineage cut between: re-splitting the
+text costs less than storing the rows (BENCH.md design decision
+"codegen text kernels").
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .lm import SCALE, _words
+from ..functions.windows import dim_window
+from .lm import SCALE, _words, adjacent_pairs
 
-__all__ = ["feature_bucket", "dsir_weights"]
+__all__ = ["feature_bucket", "bucket_rows", "dsir_weights"]
 
 
 def _hexval(h: Column, i: int) -> Column:
@@ -79,33 +87,38 @@ def feature_bucket(
     return F.pmod(raw, F.lit(n_buckets))
 
 
-def bucket_arrays(
+def bucket_rows(
     docs: DataFrame,
     text_col: str = "text",
     n_buckets: int = 1024,
     hasher: str = "md5",
 ) -> DataFrame:
-    """(doc_id, buckets: array<int>): each document's unigram + bigram
-    features hashed in place — the md5 runs inside the array transform,
-    one row per document, so no feature STRING is ever exploded or
-    shuffled. The bigram pairing is the same codegen zip_with as
-    lm.bigrams."""
-    w = _words(text_col)
-    n = F.size(w)
-    bg = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(w, 1, n - 1),
-            F.slice(w, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return docs.select(
-        "doc_id",
-        F.transform(
-            F.concat(w, bg),
-            lambda f: feature_bucket(f, n_buckets, hasher).cast("int"),
-        ).alias("buckets"),
+    """(doc_id, bucket): one row per unigram and bigram feature of each
+    document, hashed into its bucket. One ``explode(arrays_zip(...))``
+    pairs every token with NULL (unigrams) and every adjacent pair with
+    its second token (bigrams, lm.adjacent_pairs); ``concat_ws`` skips
+    the NULL, so the feature string is built and hashed on the exploded
+    row. Array expressions only: a ``transform``/``zip_with`` lambda
+    would run interpreted (``CodegenFallback``)."""
+    w = F.col("_ds_w")
+    first, second = adjacent_pairs(w)
+    feats = F.arrays_zip(
+        F.concat(w, first).alias("a"),
+        F.concat(
+            F.array_repeat(F.lit(None).cast("string"), F.size(w)), second
+        ).alias("b"),
+    )
+    return (
+        docs.select("doc_id", _words(text_col).alias("_ds_w"))
+        .select("doc_id", F.explode(feats).alias("f"))
+        .select(
+            "doc_id",
+            feature_bucket(
+                F.concat_ws(" ", "f.a", "f.b"), n_buckets, hasher
+            )
+            .cast("int")
+            .alias("bucket"),
+        )
     )
 
 
@@ -126,41 +139,36 @@ def dsir_weights(
     selects by RANK (top fraction, or Gumbel-perturbed sampling). Compose
     with sampling.weighted_sample / stratified top-k for the selection
     step."""
-    fa = bucket_arrays(docs, text_col, n_buckets, hasher).localCheckpoint(
-        eager=False
-    )
-    fx = fa.select("doc_id", F.explode("buckets").alias("bucket"))
-    q = fx.groupBy("bucket").agg(F.count("*").cast("long").alias("cq"))
-    p = (
-        bucket_arrays(target, text_col, n_buckets, hasher)
-        .select(F.explode("buckets").alias("bucket"))
+    fx = bucket_rows(docs, text_col, n_buckets, hasher)
+    # both distributions in one B-row aggregation over the tagged union
+    raw = F.col("_raw")
+    dist = (
+        fx.select("bucket", F.lit(True).alias("_raw"))
+        .unionByName(
+            bucket_rows(target, text_col, n_buckets, hasher).select(
+                "bucket", F.lit(False).alias("_raw")
+            )
+        )
         .groupBy("bucket")
-        .agg(F.count("*").cast("long").alias("cp"))
+        .agg(
+            F.count(F.when(raw, 1)).cast("long").alias("cq"),
+            F.count(F.when(~raw, 1)).cast("long").alias("cp"),
+        )
     )
-    zero = F.lit(0).cast("long")
-    dist = q.join(p, "bucket", "full").select(
-        "bucket",
-        F.coalesce("cq", zero).alias("cq"),
-        F.coalesce("cp", zero).alias("cp"),
+    # corpus totals over the B-row table (a dimension-sized frame)
+    everything = dim_window("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    tot = dist.agg(
-        F.sum("cq").cast("long").alias("nq"),
-        F.sum("cp").cast("long").alias("np"),
-    )
+    nq = F.sum("cq").over(everything)
+    np_ = F.sum("cp").over(everything)
     b = F.lit(n_buckets)
-    lw = dist.crossJoin(F.broadcast(tot)).select(
+    lw = dist.select(
         "bucket",
         F.floor(
             F.lit(SCALE)
             * F.log(
-                (
-                    (F.col("cp") + 1).cast("double")
-                    * (F.col("nq") + b).cast("double")
-                )
-                / (
-                    (F.col("cq") + 1).cast("double")
-                    * (F.col("np") + b).cast("double")
-                )
+                ((F.col("cp") + 1).cast("double") * (nq + b).cast("double"))
+                / ((F.col("cq") + 1).cast("double") * (np_ + b).cast("double"))
             )
         )
         .cast("long")

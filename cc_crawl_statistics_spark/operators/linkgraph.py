@@ -72,10 +72,11 @@ def page_outlinks_rel(pages: DataFrame,
     outlink of the page) and per-anchor ``rel="nofollow"``.
 
     Same scale shape as page_outlinks: the one stage that decodes the
-    html blob computes hrefs + the two boolean tiers in codegen; the
-    explode and the distinct shuffle carry only slim strings. The
-    nofollow filters run BEFORE the explode (array filter) so suppressed
-    anchors never fan out."""
+    html blob computes hrefs + the two boolean tiers (regexps in
+    generated code, the per-anchor ``transform``/``filter`` interpreted —
+    ``CodegenFallback``); the explode and the distinct shuffle carry only
+    slim strings. The nofollow filters run BEFORE the explode (array
+    filter) so suppressed anchors never fan out."""
     from ..functions.rep import (
         parse_meta_robots_col,
         parse_outlinks_rel_col,
@@ -187,10 +188,11 @@ def anchor_text_stats(pages_html: DataFrame, top_k: int = 2) -> DataFrame:
     product (what link-based ranking / query-independent relevance
     training consumes). Input: rows with an ``html`` binary column.
 
-    Plan shape: anchors parse in codegen (functions/links.py
-    parse_anchors_col), the blob is pruned BEFORE the explode, counts
-    pre-aggregate map-side on (dst_host, text), and the ranking window
-    partitions by dst_host over the already-aggregated distinct-text
+    Plan shape: anchors parse JVM-side (functions/links.py
+    parse_anchors_col: codegen regexp, interpreted field ``transform``),
+    the blob is pruned BEFORE the explode, counts pre-aggregate map-side
+    on (dst_host, text), and the ranking window partitions by dst_host
+    over the already-aggregated distinct-text
     rows (per-host cardinality, not per-anchor volume). A pathological
     host with ~10^6 distinct texts is one partition of counted rows —
     acceptable; the salted two-phase shape (textstats.vocabulary) drops

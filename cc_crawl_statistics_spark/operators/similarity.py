@@ -1,7 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k — exact, one broadcast of the query set,
-cosine fully inside codegen (zip_with + aggregate, no UDF). Scale path:
+cosine JVM-side (zip_with + aggregate, no UDF; both are interpreted
+``CodegenFallback`` expressions). Scale path:
 random-hyperplane LSH bucketing so each query only scores its bucket's
 candidates (probing multiple buckets for recall).
 """
@@ -36,7 +37,8 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k per query. Plan: broadcast(queries) ⨯ emb →
-    cosine in codegen → per-query row_number ≤ k (TakeOrdered shape).
+    cosine (zip_with + aggregate, interpreted) → per-query row_number ≤ k
+    (TakeOrdered shape).
 
     Scale: cost is |queries|·|corpus| — right when queries are a small batch
     (broadcast side). For corpus-×-corpus use the LSH path."""

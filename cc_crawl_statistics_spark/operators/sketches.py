@@ -163,9 +163,10 @@ def heavy_hitters(
 
 
 def _cms_cells(key, depth: int, width: int, hash_fn=None):
-    """The d (seed, bucket) cells a key hashes to — one codegen projection,
-    no UDF: bucket_i = pmod(hash_i(key), width). ``hash_fn(key, seed)``
-    defaults to xxhash64 (production); passing
+    """The d (seed, bucket) cells a key hashes to — one projection, no UDF
+    (generated code for xxhash64; the porthash flavor's ``aggregate`` fold
+    runs interpreted): bucket_i = pmod(hash_i(key), width).
+    ``hash_fn(key, seed)`` defaults to xxhash64 (production); passing
     functions.porthash.porthash_seeded yields the cross-engine
     verification flavor (same cell layout, exact DuckDB oracle)."""
     if hash_fn is None:

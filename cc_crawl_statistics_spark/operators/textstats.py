@@ -602,7 +602,8 @@ def bpe_merges(
     then (a) one explode of adjacent symbol pairs + a map-side-combined
     sum — selecting the argmax pair is a 1-row driver scalar, the same
     bounded per-iteration control decision the PageRank loop makes — and
-    (b) one all-codegen higher-order `aggregate` fold that applies the
+    (b) one higher-order `aggregate` fold (JVM-side, no Python, but
+    interpreted: `ArrayAggregate` is `CodegenFallback`) that applies the
     merge greedily left-to-right per word (accumulator carries a pending
     symbol, so "aaa" under (a,a) merges positions 0-1 only).
     localCheckpoint per iteration cuts the K-deep lineage exactly like
@@ -725,7 +726,9 @@ BPE_SEP = "\x1f"
 def bpe_apply_col(word: F.Column, merges: list[tuple[str, str]],
                   sep: str = BPE_SEP) -> F.Column:
     """array<string> of BPE tokens for a word column, applying ``merges``
-    in rank order — all codegen, no Python, no iteration state.
+    in rank order — no Python, no iteration state. The replace chain is
+    generated code; the closing empty-token ``filter`` is a lambda and runs
+    interpreted (``CodegenFallback``).
 
     The trick that makes greedy BPE application a plain expression chain:
     represent the symbol sequence PREFIX-separated (``\\x1fw\\x1fo\\x1fr``…,

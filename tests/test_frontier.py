@@ -53,10 +53,30 @@ def store(tmp_path):
     return SnapshotStore(str(tmp_path / "frontier"))
 
 
-def test_three_rounds_bit_for_bit(spark, store):
+@pytest.fixture(scope="module")
+def seeded_root(spark, tmp_path_factory):
+    """One store after ``run_round(spark, store, SF_SMOKE)`` on default
+    arguments — the seed (round 0) and round 1 — and that call's metrics.
+    Tests that would begin with that call copy this store instead."""
+    root = str(tmp_path_factory.mktemp("seeded") / "frontier")
+    return root, scheduler.run_round(spark, SnapshotStore(root), SF_SMOKE)
+
+
+@pytest.fixture()
+def seeded(seeded_root, tmp_path):
+    """(store, round-1 metrics): a private copy of the seeded store."""
+    root, metrics = seeded_root
+    dst = str(tmp_path / "frontier")
+    shutil.copytree(root, dst)
+    return SnapshotStore(dst), dict(metrics)
+
+
+def test_three_rounds_bit_for_bit(spark, seeded):
+    store, metrics = seeded
     st = model.seed(N_DOCS)
     for rnd in range(1, 4):
-        metrics = scheduler.run_round(spark, store, SF_SMOKE)
+        if rnd > 1:
+            metrics = scheduler.run_round(spark, store, SF_SMOKE)
         msched = model.run_round(st)
         assert metrics["n_scheduled"] == len(msched)
         assert schedule_rows(spark, store, rnd) == model_rows(msched)
@@ -75,13 +95,14 @@ def test_three_rounds_bit_for_bit(spark, store):
     assert spark_seen == model_seen
 
 
-def test_resume_from_snapshot(spark, store):
+def test_resume_from_snapshot(spark, seeded):
     """Kill after round 2, reopen the store, round 3 must equal the
     uninterrupted model run (SURVEY.md §5 resume test)."""
+    store, _ = seeded
     st = model.seed(N_DOCS)
-    for _ in range(2):
-        scheduler.run_round(spark, store, SF_SMOKE)
-        model.run_round(st)
+    model.run_round(st)  # round 1 is in the seeded store
+    scheduler.run_round(spark, store, SF_SMOKE)
+    model.run_round(st)
     reopened = SnapshotStore(store.root)  # fresh handle = restart
     assert reopened.latest_round() == 2
     scheduler.run_round(spark, reopened, SF_SMOKE)
@@ -89,9 +110,9 @@ def test_resume_from_snapshot(spark, store):
     assert schedule_rows(spark, reopened, 3) == model_rows(msched)
 
 
-def test_crashed_round_is_ignored_and_redone(spark, store):
+def test_crashed_round_is_ignored_and_redone(spark, seeded):
+    store, _ = seeded
     st = model.seed(N_DOCS)
-    scheduler.run_round(spark, store, SF_SMOKE)
     model.run_round(st)
     # simulate a crash mid-round-2: data written but no manifest
     rdir = os.path.join(store.root, "round=0002")
@@ -103,11 +124,11 @@ def test_crashed_round_is_ignored_and_redone(spark, store):
     assert os.path.exists(os.path.join(rdir, MANIFEST))
 
 
-def test_politeness_gate(spark, store):
+def test_politeness_gate(spark, seeded):
     """Hosts with robots 403 never appear in any schedule; per-host budget
     respected; priority is (depth asc, score desc, url asc)."""
+    store, _ = seeded
     st = model.seed(N_DOCS)
-    scheduler.run_round(spark, store, SF_SMOKE)
     model.run_round(st)
     sched = store.read(spark, 1, "schedule").toPandas()
     for host, grp in sched.groupby("host"):
@@ -122,14 +143,14 @@ def test_politeness_gate(spark, store):
         assert keys == sorted(keys)
 
 
-def test_round_stats_semantics(spark, store):
+def test_round_stats_semantics(spark, seeded):
     """Pins the documented one-fetch-per-URL-per-round stats semantics:
     pages == urls on EVERY row (a deduplicating frontier fetches each
     scheduled URL exactly once per round), the size row equals the
     schedule count, each histogram's pages sum to the schedule count, and
     the http_status histogram reflects the scheduled URLs' earliest-fetch
     attributes (url_universe min_by) exactly."""
-    scheduler.run_round(spark, store, SF_SMOKE)
+    store, _ = seeded
     stats = store.read(spark, 1, "round_stats").toPandas()
     sched = store.read(spark, 1, "schedule").toPandas()
     types = set(stats.type)
@@ -334,7 +355,7 @@ def test_reopen_under_bloom_prefilter_bit_identical(spark, tmp_path):
     assert reopened <= {row[0] for row in out["prefilter"][1]}
 
 
-def test_unknown_store_format_refused(spark, tmp_path):
+def test_unknown_store_format_refused(spark, seeded):
     """A store whose round-0 manifest lacks format_version, or names
     another one (the v1 layout included), is refused at open with a
     ValueError, so no round is ever scheduled on it. A fresh store
@@ -344,9 +365,8 @@ def test_unknown_store_format_refused(spark, tmp_path):
 
     from cc_crawl_statistics_spark.frontier.state import FORMAT_VERSION
 
-    root = str(tmp_path / "s")
-    store = SnapshotStore(root)
-    scheduler.run_round(spark, store, SF_SMOKE)
+    store, _ = seeded
+    root = store.root
     for rnd in (0, 1):
         man = store.manifest(rnd)
         assert man["format_version"] == FORMAT_VERSION == 2
@@ -812,7 +832,7 @@ def test_priority_aging_bit_for_bit(spark, tmp_path):
     assert aged != static  # aging visibly reorders under contention
 
 
-def test_reopen_for_policy_change_glue(spark, tmp_path):
+def test_reopen_for_policy_change_glue(spark, seeded):
     """Robots-drift reopen: exactly the disallowed→allowed flip set's
     canonical seen keys leave the seen set; a host-level no-op epoch pair
     reopens nothing."""
@@ -823,8 +843,7 @@ def test_reopen_for_policy_change_glue(spark, tmp_path):
     )
     from cc_crawl_statistics_spark.sources.tables import pages_df
 
-    store = SnapshotStore(str(tmp_path / "s"))
-    scheduler.run_round(spark, store, SF_SMOKE)
+    store, _ = seeded
     pages = pages_df(spark, SF_SMOKE)
     before = {r.seen_key for r in store.read_seen(spark, 1).collect()}
     n = reopen_for_policy_change(spark, store, 1, pages, 0, 1)
@@ -877,12 +896,13 @@ def test_run_round_fetcher_sharding(spark, tmp_path):
     assert 0 < m["fetcher_max_load_permille"] <= 1000
 
 
-def test_round_trajectory_matches_manifests(spark, store):
+def test_round_trajectory_matches_manifests(spark, seeded):
     """Trajectory rows come straight from the committed manifests; the
     discovery ratio is the integer permille of new/scheduled."""
     from cc_crawl_statistics_spark.frontier.state import round_trajectory
 
-    for _ in range(3):
+    store, _ = seeded
+    for _ in range(2):
         scheduler.run_round(spark, store, SF_SMOKE)
     rows = {r.round: r for r in round_trajectory(spark, store).collect()}
     assert set(rows) == {0, 1, 2, 3}
@@ -957,12 +977,12 @@ def test_enforce_robots_paths_bit_for_bit(spark, store):
         seen_urls |= set(tbl.url)
 
 
-def test_mid_store_flag_enable_widens_schedule_schema(spark, store):
+def test_mid_store_flag_enable_widens_schedule_schema(spark, seeded):
     """Turning enforcement/sharding ON for a store whose earlier rounds
     wrote the narrow schedule schema must not bind an earlier round's
     narrow schema to the new round's tables (regression: the
     commit-internal and metrics reads dropped the new columns)."""
-    scheduler.run_round(spark, store, SF_SMOKE)
+    store, _ = seeded
     m2 = scheduler.run_round(
         spark, store, SF_SMOKE, enforce_robots_paths=True, n_fetchers=4
     )

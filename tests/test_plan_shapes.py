@@ -103,7 +103,6 @@ _BOUNDED_BNLJ_OK = {
     "nb_agreement",  # same training CTE inside
     "nb_calibration",  # same scored subplan: docs x broadcast C-row priors
     "lm_bigram_weights",  # smoothing vs 1-row vocab-size aggregate
-    "dsir_weights",  # bucket weights vs 1-row distribution totals
     "lm_perplexity",  # same 1-row vocab join in the scoring chain
     "lm_quality_filter",  # same scoring chain inside
     "curation_funnel",  # composes the LM scoring chain
@@ -128,6 +127,45 @@ def test_no_cartesian_product_in_any_registered_query(spark, name):
     assert "CartesianProduct" not in plan, name
     if name not in _BOUNDED_BNLJ_OK:
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def _dsir_xxhash64(spark, sf):
+    from cc_crawl_statistics_spark.operators.dsir import dsir_weights
+
+    d = load_table(spark, sf, "documents")
+    return dsir_weights(
+        d, d.filter("lang = 'en' AND doc_id % 5 = 0"), hasher="xxhash64"
+    )
+
+
+# the per-row text kernels: dsir_weights (both hashers), lm_cross_entropy
+# (lm_perplexity), lm_train_bigram, boilerplate_strip, and unit_dedup
+# (split_units + reassembly)
+_TEXT_KERNEL_PLANS = {
+    "dsir_weights": Q.QUERIES["dsir_weights"],
+    "dsir_weights_xxhash64": _dsir_xxhash64,
+    "lm_perplexity": Q.QUERIES["lm_perplexity"],
+    "lm_bigram_weights": Q.QUERIES["lm_bigram_weights"],
+    "boilerplate_strip": Q.QUERIES["boilerplate_strip"],
+    "unit_dedup": Q.QUERIES["unit_dedup"],
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TEXT_KERNEL_PLANS))
+def test_text_kernels_have_no_lambda(spark, name):
+    """The text kernels are generated-code array expressions (explode,
+    arrays_zip, slice, concat_ws, sort_array): a higher-order function
+    (transform, zip_with, filter, aggregate, array_sort) shows up as a
+    lambdafunction and runs interpreted, as a CodegenFallback (BENCH.md
+    design decision "codegen text kernels"). The formatted explain of the
+    executed plan lists every operator's expressions, the aggregates'
+    result expressions included (the plain tree string omits those)."""
+    df = _TEXT_KERNEL_PLANS[name](spark, SF)
+    formatted = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    plan = df._jdf.queryExecution().explainString(formatted)
+    assert "lambdafunction" not in plan, plan
 
 
 def test_host_quality_two_level_agg_no_expand(spark):
