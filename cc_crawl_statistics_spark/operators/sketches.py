@@ -1,13 +1,16 @@
-"""Mergeable frequency sketches: space-saving heavy hitters + count-min.
+"""Mergeable frequency sketches: top-k-of-local-counts heavy hitters + count-min.
 
-The engine's exact top-K (counts.top_k, host_bucketed_topk) shuffles one
-partial row per distinct key — correct, but at 100-TB scale the host/URL
-dimensions have 10^8-10^10 distinct keys, so even the pre-aggregated
-shuffle is key-cardinality-sized. This module adds the classic bounded-
-memory alternative (Metwally et al. space-saving; Agarwal et al.
-"Mergeable Summaries", PODS'12): each partition keeps at most ``k``
-counters, so the shuffle carries ``k × partitions`` rows regardless of key
-cardinality, at the price of rigorous-but-approximate counts.
+The engine's exact top-K (counts.top_k, host_bucketed_topk) ranks every
+distinct key after a key-partitioned aggregation. The heavy hitters here
+keep a summary of at most ``k`` rows per input partition instead
+(TPUT-style top-k of local counts, Cao & Wang PODC'04; the merge is that
+of Agarwal et al. "Mergeable Summaries", PODS'12): each partition sums
+its keys' weights exactly, keeps its ``k`` heaviest keys and records the
+largest weight it dropped, and merging the summaries brackets every kept
+key's true weight between exact integer bounds. Building a summary
+shuffles each partition's distinct keys (a (partition, key)
+aggregation), so what stays k × partitions-sized is the merge and the
+rank, not that first shuffle.
 
 Complements the HLL sketches (distinct counts, counts.size_estimate) with
 the frequency-sketch class the reference family of crawl dashboards needs
@@ -15,15 +18,19 @@ for "top hosts this crawl" at index scale.
 
 Guarantees (and what the tests pin):
   - every emitted key carries exact integer bounds
-    ``est_lo ≤ true ≤ est_hi``;
-  - any key whose true weight exceeds the summed per-partition minima
-    (≤ N/k per partition) is guaranteed present in the merged sketch;
-  - the per-partition summary loop touches only batch-pre-aggregated
-    (key, weight) pairs (pandas groupby first), never raw rows.
+    ``est_lo ≤ true ≤ est_hi``, ``est_lo`` the sum of the key's exact
+    partition-local weights where it was kept;
+  - any key whose true weight exceeds the summed per-partition dropped
+    maxima is guaranteed present in the merged sketch;
+  - the summary is a function of the input partitioning only, not of the
+    row order within a partition; with ``k`` ≥ the distinct keys of every
+    partition it is exact (est_lo == est_hi == true);
+  - the whole plan is Catalyst operators (aggregates and windows): no row
+    crosses Arrow into a Python worker.
 
-The space-saving sketch output depends on the input partitioning/order,
-so queries over it are registered rows-only — the error-bound tests, not
-a SQL oracle, are the correctness evidence. The hash-based sketches
+The heavy-hitters output depends on the input partitioning, so queries
+over it are registered rows-only — the error-bound tests, not a SQL
+oracle, are the correctness evidence. The hash-based sketches
 (CMS, KMV, MinHash, SimHash, HLL registers) are partitioning-invariant,
 and each also ships a *portable-hash verification flavor*
 (functions/porthash) whose construction is replayed bit-for-bit by a
@@ -34,81 +41,54 @@ kmv_overlap_exact, minhash_exact, simhash_exact, hll_registers_exact).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.windows import dim_window
 
-_PARTIAL_SCHEMA = (
-    "key string, est long, err long, part_id long, part_min long"
-)
 
-
-def _space_saving_batches(
-    batches: Iterator[pd.DataFrame], k: int
-) -> Iterator[pd.DataFrame]:
-    """One partition's bounded summary: dict of ≤k (est, err) counters fed
-    with per-batch pre-aggregated weights; eviction replaces the current
-    minimum counter (est = min + w, err = min)."""
-    est: dict[str, int] = {}
-    err: dict[str, int] = {}
-    part_id = -1
-    for pdf in batches:
-        if part_id < 0 and len(pdf):
-            part_id = int(pdf["part_id"].iloc[0])
-        agg = pdf.groupby("key", sort=False)["w"].sum()
-        for key, w in agg.items():
-            w = int(w)
-            if key in est:
-                est[key] += w
-            elif len(est) < k:
-                est[key] = w
-                err[key] = 0
-            else:
-                mkey = min(est, key=lambda x: (est[x], x))
-                mval = est.pop(mkey)
-                err.pop(mkey)
-                est[key] = mval + w
-                err[key] = mval
-    if part_id < 0:
-        return
-    part_min = min(est.values()) if len(est) >= k else 0
-    yield pd.DataFrame(
-        {
-            "key": list(est),
-            "est": [est[x] for x in est],
-            "err": [err[x] for x in est],
-            "part_id": part_id,
-            "part_min": part_min,
-        }
-    )
-
-
-def space_saving_partials(
+def partition_topk_partials(
     df: DataFrame, key_col, k: int = 1024, weight_col=None
 ) -> DataFrame:
-    """Per-partition space-saving summaries (≤k rows each): the map-side
-    half of the mergeable sketch. ``part_min`` is the partition's smallest
-    counter — the proven upper bound on the true weight of ANY key the
-    summary evicted (0 while the summary never filled)."""
+    """Each input partition's ``k`` heaviest keys by exact local weight:
+    rows (key, est, part_id, part_min, local_rank), the map-side half of
+    the mergeable sketch. ``est`` is the key's exact weight within
+    partition ``part_id`` and ``local_rank`` its 1-based rank there by
+    (est desc, key asc), so ties at the k boundary go to the smaller key;
+    ``part_min`` is the largest weight the partition dropped — the upper
+    bound on the local weight of ANY key it did not keep (0 when it kept
+    every key).
+
+    Plan: a (part_id, key) aggregation — partial-aggregated on the map
+    side — then one window per part_id that ranks and reads the
+    (k+1)-th weight. The shuffle carries each partition's distinct keys,
+    not ≤ k rows per partition; in exchange no row goes through Python
+    and no key costs more than a hash-aggregate update and a sort."""
     w = (
         F.col(weight_col).cast("long")
         if isinstance(weight_col, str)
         else (weight_col.cast("long") if weight_col is not None else F.lit(1).cast("long"))
     )
     key = F.col(key_col) if isinstance(key_col, str) else key_col
-    slim = df.select(
-        key.cast("string").alias("key"),
-        w.alias("w"),
-        F.spark_partition_id().cast("long").alias("part_id"),
+    local = (
+        df.select(
+            key.cast("string").alias("key"),
+            w.alias("w"),
+            F.spark_partition_id().cast("long").alias("part_id"),
+        )
+        .groupBy("part_id", "key")
+        .agg(F.sum("w").alias("est"))
     )
-    return slim.mapInPandas(
-        lambda it: _space_saving_batches(it, k),
-        schema=_PARTIAL_SCHEMA,
-    )
+    by_weight = Window.partitionBy("part_id").orderBy(F.desc("est"), F.asc("key"))
+    whole = by_weight.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return local.select(
+        "key",
+        "est",
+        "part_id",
+        F.coalesce(F.nth_value("est", k + 1).over(whole), F.lit(0).cast("long"))
+        .alias("part_min"),
+        F.row_number().over(by_weight).alias("local_rank"),
+    ).filter(F.col("local_rank") <= k)
 
 
 def heavy_hitters(
@@ -121,41 +101,38 @@ def heavy_hitters(
     """Merged heavy-hitters sketch: top ``top`` keys by upper-bound weight
     with exact integer bounds (est_lo ≤ true ≤ est_hi).
 
-    Merge semantics (Mergeable Summaries, PODS'12): per key,
+    Merge over the partition_topk_partials rows, per key:
+      est_lo = Σ present est_i                   (exact local weights)
       est_hi = Σ present est_i  +  Σ absent part_min_i
-             = Σ est_i + (total_min − Σ covered part_min_i)
-      est_lo = Σ present (est_i − err_i)
-    Both sums are over the bounded partials table (k × partitions rows) —
-    the only shuffle in the plan; the 1-row total_min scalar is a cross
-    join, not a collect."""
-    partials = space_saving_partials(df, key_col, k, weight_col)
-    # cache boundary: the partial summaries are tiny but feed two branches
-    partials = partials.localCheckpoint(eager=False)
-    total_min = (
-        partials.select("part_id", "part_min")
-        .distinct()
-        .agg(F.sum("part_min").alias("total_min"))
+             = est_lo + (total_min − Σ present part_min_i)
+    A key absent from partition i weighs at most part_min_i there, so
+    est_hi bounds it; a key absent everywhere weighs at most total_min.
+    total_min counts each partition once, through its local_rank-1 row,
+    and is summed by the same single-partition window pass that ranks
+    the merged keys — the partials hold ≤ k rows per partition, so that
+    pass is k × partitions-sized. Trade-off: the partials' own shuffle
+    carries each partition's distinct keys, where a per-partition counter
+    summary would ship ≤ k rows; in exchange the plan starts no Python
+    worker and keeps no per-row sequential state."""
+    merged = partition_topk_partials(df, key_col, k, weight_col).groupBy("key").agg(
+        F.sum("est").alias("est_lo"),
+        F.sum("part_min").alias("covered_min"),
+        F.sum(F.when(F.col("local_rank") == 1, F.col("part_min"))).alias("first_min"),
     )
-    merged = (
-        partials.groupBy("key")
-        .agg(
-            F.sum("est").alias("sum_est"),
-            F.sum(F.col("est") - F.col("err")).alias("est_lo"),
-            F.sum("part_min").alias("covered_min"),
-        )
-        .crossJoin(F.broadcast(total_min))
-        .select(
-            "key",
-            F.greatest(F.col("est_lo"), F.lit(0)).alias("est_lo"),
-            (
-                F.col("sum_est") + F.col("total_min") - F.col("covered_min")
-            ).alias("est_hi"),
-        )
+    # bounded single-partition windows: merged has ≤ k × partitions rows
+    all_keys = dim_window(F.asc("key")).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    # bounded single-partition window: merged has ≤ k × partitions rows
+    bounded = merged.select(
+        "key",
+        "est_lo",
+        (
+            F.col("est_lo") + F.sum("first_min").over(all_keys) - F.col("covered_min")
+        ).alias("est_hi"),
+    )
     w_rank = dim_window(F.desc("est_hi"), F.desc("est_lo"), F.asc("key"))
     return (
-        merged.withColumn("rank", F.row_number().over(w_rank))
+        bounded.withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= top)
         .select("key", "est_lo", "est_hi", F.col("rank").cast("long").alias("rank"))
         .orderBy("rank")
@@ -201,8 +178,8 @@ def cms_build(
     immediately absorbed by the map-side partial aggregate on the bounded
     (seed, bucket) grid — each partition ships ≤ depth × width partial
     rows, so the shuffle is sketch-sized, not corpus-sized (same property
-    as the HLL and space-saving paths). Unlike space-saving the table is
-    partition-order-independent: pure integer sums, deterministic across
+    as the HLL paths). Unlike heavy_hitters the table is
+    partitioning-independent: pure integer sums, deterministic across
     any repartitioning (pinned by tests/test_sketches.py)."""
     w = (
         F.col(weight_col).cast("long")
@@ -655,7 +632,7 @@ def hll_registers_portable(
 
 
 __all__ = [
-    "space_saving_partials",
+    "partition_topk_partials",
     "heavy_hitters",
     "cms_build",
     "cms_merge",

@@ -2153,11 +2153,13 @@ ORACLES["language_drift"] = _drift_oracle("string_split(languages, ',')[1]")
 
 
 def q_top_hosts_sketch(spark: SparkSession, sf: str) -> DataFrame:
-    """A18 sketch mode: space-saving heavy hitters over the host dimension
-    (operators/sketches.py) — bounded-memory counterpart of the exact
-    top_hosts shuffle. Rows-only: the estimates depend on input
-    partitioning, so the evidence is tests/test_sketches.py's exact
-    integer bounds + presence guarantee, not a SQL oracle."""
+    """A18 sketch mode: heavy hitters over the host dimension
+    (operators/sketches.py) — each input partition's top-k hosts by exact
+    local count, merged with exact integer bounds; the counterpart of the
+    exact top_hosts shuffle whose merge and rank stay k × partitions-sized.
+    Rows-only: the estimates depend on input partitioning (not on row
+    order), so the evidence is tests/test_sketches.py's exact integer
+    bounds + presence guarantee, not a SQL oracle."""
     from ..operators.sketches import heavy_hitters
 
     from ..operators.counts import page_rows

@@ -13,6 +13,9 @@ from cc_crawl_statistics_spark.sources.tables import TABLES  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
+# physical-plan nodes that start Python workers (Arrow or pickled batches)
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
 
 @pytest.fixture(scope="session")
 def spark():

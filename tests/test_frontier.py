@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from cc_crawl_statistics_spark.frontier import model, scheduler
 from cc_crawl_statistics_spark.frontier.state import MANIFEST, SnapshotStore
-from tests.conftest import SF_SMOKE
+from tests.conftest import PYTHON_NODES, SF_SMOKE
 
 N_DOCS = 500  # documents rows at sf0.001
 
@@ -408,9 +408,6 @@ def _record_write_plans(monkeypatch) -> dict:
 
     monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     return plans
-
-
-PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
 
 
 def test_prefiltered_round_plan_probes_candidates_once(

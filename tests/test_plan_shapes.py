@@ -17,6 +17,7 @@ import pytest
 
 from cc_crawl_statistics_spark.plans import queries as Q
 from cc_crawl_statistics_spark.sources.tables import load_table, pages_df
+from tests.conftest import PYTHON_NODES
 
 SF = "/root/testdata/sf0.001"
 
@@ -97,7 +98,6 @@ _BOUNDED_BNLJ_OK = {
     "vocabulary",  # token share vs 1-row corpus-total aggregate
     "domain_weights",  # per-domain share vs 1-row total
     "tfidf_keywords",  # idf vs 1-row document-count aggregate
-    "top_hosts_sketch",  # bound columns vs 1-row Σ-part-min row
     "nb_weights",  # class priors vs 1-row corpus total
     "nb_classify",  # same training CTE inside
     "nb_agreement",  # same training CTE inside
@@ -166,6 +166,69 @@ def test_text_kernels_have_no_lambda(spark, name):
     )
     plan = df._jdf.queryExecution().explainString(formatted)
     assert "lambdafunction" not in plan, plan
+
+
+def _crawl_stats_steps():
+    """The step functions of a perfbench ``crawl_stats`` pass, called as
+    the pass calls them (perfbench/workloads.py CRAWL_STEPS, minus the
+    scan): (pages, documents) -> DataFrame."""
+    from pyspark.sql import functions as F
+
+    from cc_crawl_statistics_spark.operators import counts as C
+    from cc_crawl_statistics_spark.operators import sketches as SK
+    from cc_crawl_statistics_spark.operators import timeseries as TS
+    from cc_crawl_statistics_spark.operators.dedup import boilerplate_strip
+    from cc_crawl_statistics_spark.operators.dsir import dsir_weights
+    from cc_crawl_statistics_spark.operators.lm import lm_cross_entropy
+    from cc_crawl_statistics_spark.operators.textstats import vocabulary
+
+    def lm_reference(d):
+        return d.filter(
+            (F.col("lang") == "en")
+            & (F.pmod(F.xxhash64("doc_id"), F.lit(50)) == 0)
+        )
+
+    return {
+        "crawl_size": lambda p, d: C.crawl_size(p),
+        "tld_counts": lambda p, d: C.tld_counts(p),
+        "new_items_per_crawl": lambda p, d: C.new_items_per_crawl(p),
+        "crawl_overlap": lambda p, d: TS.crawl_overlap(p),
+        "trailing_distinct_union": lambda p, d: TS.trailing_distinct_union(p, 2),
+        "crawl_overlap_sketch": lambda p, d: TS.crawl_overlap_sketch(p),
+        "heavy_hitters": lambda p, d: SK.heavy_hitters(p, "domain", k=2048),
+        "dsir_weights": lambda p, d: dsir_weights(
+            d, d.filter("lang = 'en' AND doc_id % 5 = 0"), hasher="xxhash64"
+        ),
+        "boilerplate_strip": lambda p, d: boilerplate_strip(
+            d, group_col="source", unit_words=8
+        ),
+        "lm_cross_entropy": lambda p, d: lm_cross_entropy(
+            d, lm_reference(d), broadcast_model=True
+        ),
+        "vocabulary": lambda p, d: vocabulary(d, top_k=1000, n_salts=32),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_crawl_stats_steps()))
+def test_crawl_stats_steps_start_no_python_worker(spark, name, monkeypatch):
+    """Every step of a crawl_stats pass is Catalyst operators only: no
+    Arrow/pickled Python UDF and no mapInPandas in its executed plan
+    (BENCH.md design decisions "heavy hitters in Catalyst" and "codegen
+    text kernels"). A localCheckpoint leaves a ``Scan ExistingRDD`` leaf
+    that hides the plan beneath it, so the plans are built with
+    localCheckpoint as the identity; heavy_hitters must have no lineage
+    cut at all."""
+    pages = pages_df(spark, SF)
+    docs = load_table(spark, SF, "documents")
+    step = _crawl_stats_steps()[name]
+    if name == "heavy_hitters":
+        assert "ExistingRDD" not in _executed(step(pages, docs))
+    monkeypatch.setattr(
+        type(docs), "localCheckpoint", lambda self, *a, **k: self
+    )
+    plan = _executed(step(pages, docs))
+    for node in PYTHON_NODES:
+        assert node not in plan, (node, plan)
 
 
 def test_host_quality_two_level_agg_no_expand(spark):

@@ -1,11 +1,13 @@
-"""Space-saving heavy-hitters sketch: bound and guarantee properties.
+"""Top-k-of-local-counts heavy-hitters sketch: bound and guarantee properties.
 
-No SQL oracle (the sketch depends on partitioning/order); instead the
+No SQL oracle (the sketch depends on the input partitioning); instead the
 tests pin the two theorems the implementation claims:
   1. every emitted key's exact bounds bracket its true count;
-  2. any key heavier than the summed per-partition minima is present.
+  2. any key heavier than the summed per-partition dropped maxima is
+     present.
 Plus the degenerate-exactness case (k >= distinct keys => est_lo ==
-est_hi == true).
+est_hi == true), row-order independence, and the per-partition summary
+itself (part_min, key-ascending ties at the k boundary).
 """
 
 import random
@@ -14,7 +16,7 @@ from pyspark.sql import functions as F
 
 from cc_crawl_statistics_spark.operators.sketches import (
     heavy_hitters,
-    space_saving_partials,
+    partition_topk_partials,
 )
 
 
@@ -43,7 +45,7 @@ def test_bounds_bracket_true_counts(spark):
 
 def test_heavy_keys_guaranteed_present(spark):
     df = _skewed_df(spark)
-    partials = space_saving_partials(df, "key", k=32)
+    partials = partition_topk_partials(df, "key", k=32)
     mins = (
         partials.select("part_id", "part_min").distinct()
         .agg(F.sum("part_min").alias("m"))
@@ -85,6 +87,72 @@ def test_weighted_counts(spark):
     assert out["c"]["est_lo"] == out["c"]["est_hi"] == 2
     # tie between b and c at weight 2 -> key-ascending tiebreak
     assert out["b"]["rank"] < out["c"]["rank"]
+
+
+def test_row_order_within_partitions_does_not_matter(spark):
+    df = _skewed_df(spark)
+    base = heavy_hitters(df, "key", k=16, top=10**6).collect()
+    for seed in (1, 2):
+        shuffled = df.sortWithinPartitions(F.rand(seed))
+        assert heavy_hitters(shuffled, "key", k=16, top=10**6).collect() == base
+
+
+def _partitioned(spark, parts):
+    """One DataFrame partition per list of key rows in ``parts``, in
+    that order."""
+    # parallelize slices a list evenly, so the partitions must be of one
+    # length
+    assert len({len(p) for p in parts}) == 1
+    rdd = spark.sparkContext.parallelize(
+        [r for p in parts for r in p], len(parts)
+    )
+    return spark.createDataFrame(rdd, "key string")
+
+
+def test_part_min_is_largest_dropped_local_weight(spark):
+    # partition 0: a×4 b×3 c×2 d×1 (k=2 drops c, d -> part_min 2);
+    # partition 1: a×5 e×5 (2 keys, nothing dropped -> part_min 0)
+    p0 = [("a",)] * 4 + [("b",)] * 3 + [("c",)] * 2 + [("d",)]
+    p1 = [("a",)] * 5 + [("e",)] * 5
+    partials = partition_topk_partials(_partitioned(spark, [p0, p1]), "key", k=2)
+    rows = sorted(tuple(r) for r in partials.collect())
+    assert rows == [
+        ("a", 4, 0, 2, 1), ("a", 5, 1, 0, 1), ("b", 3, 0, 2, 2),
+        ("e", 5, 1, 0, 2),
+    ]
+    out = {r["key"]: r for r in heavy_hitters(_partitioned(spark, [p0, p1]), "key", k=2).collect()}
+    # b is absent from partition 1, which dropped nothing: exact
+    assert out["b"]["est_lo"] == out["b"]["est_hi"] == 3
+    # e is absent from partition 0, which dropped weights up to 2
+    assert (out["e"]["est_lo"], out["e"]["est_hi"]) == (5, 7)
+    assert set(out) == {"a", "b", "e"}
+
+
+def test_k_boundary_ties_go_to_smaller_key(spark):
+    # four keys of equal weight, k=2: the two smallest keys are kept and
+    # the dropped maximum is that same weight
+    p0 = [("d",), ("c",), ("b",), ("a",)] * 2
+    partials = partition_topk_partials(_partitioned(spark, [p0]), "key", k=2)
+    assert sorted(tuple(r) for r in partials.collect()) == [
+        ("a", 2, 0, 2, 1), ("b", 2, 0, 2, 2),
+    ]
+
+
+def test_weighted_bounds_bracket_when_k_drops_keys(spark):
+    rng = random.Random(3)
+    rows = [
+        (f"k{rng.randrange(30):02d}", rng.randrange(1, 50)) for _ in range(600)
+    ]
+    df = spark.createDataFrame(rows, "key string, w long").repartition(6)
+    true = {}
+    for key, w in rows:
+        true[key] = true.get(key, 0) + w
+    partials = partition_topk_partials(df, "key", k=5, weight_col="w")
+    assert partials.filter("part_min > 0").count() > 0  # k really drops keys
+    out = heavy_hitters(df, "key", k=5, top=10**6, weight_col="w").collect()
+    assert out
+    for r in out:
+        assert r["est_lo"] <= true[r["key"]] <= r["est_hi"], r
 
 
 # --- count-min sketch -------------------------------------------------------
