@@ -10,7 +10,7 @@ One scheduling round is one declarative DataFrame job:
   pending frontier
     ⨝ host_ledger (broadcast)            -- politeness gate: robots + budget
     → blocked rows (robots 403) retired
-    → host-bucketed priority             -- two-phase top-B per host (skew-safe)
+    → host-bucketed priority             -- top-B per host (skew-safe)
     → schedule (rank ≤ per-host budget)
     → link expansion (discovered children)
     → anti-join url_seen                 -- the URL-seen filter
@@ -24,14 +24,15 @@ Scale design (10^10-URL frontier, 1000 executors):
   - host_ledger is a small dimension (≤ ~10^8 hosts) → broadcast join; the
     frontier side never shuffles for the gate;
   - per-host ranking would shuffle by host and a hot host (10^7 pending
-    URLs) would pin one task. Budgets are small (≤ hundreds), so ranking is
-    two-phase: partial top-B within (host, salt = xxhash64(url) % S) — a
-    map-side-friendly window over S-way split hosts — then final top-B per
-    host over ≤ S·B_max survivor rows per host. Shuffle volume after phase 1
-    is O(hosts · S · B_max), independent of frontier size;
+    URLs) would pin one task. Budgets are small (≤ hundreds), so the rank
+    filter's literal bound B_max makes Catalyst cut every map task to its
+    top-B_max per host below the one exchange (partial WindowGroupLimit);
+    shuffle volume is O(hosts · map tasks · B_max), independent of
+    frontier size;
   - url_seen is hash-keyed (xxhash64 of the canonical SURT URL — murmur/xx
     family per north_star; 64-bit keyspace, collision P < 3·10^-3 at 10^10
-    keys even before partition scoping) and range-partitioned; the exact
+    keys even before partition scoping), clustered on seen_key by the seed
+    delta's range partitioning and compaction's hash partitioning; the exact
     anti-join is preceded at scale by Spark's runtime Bloom-filter join
     (spark.sql.optimizer.runtime.bloomFilter.enabled) so frontier partitions
     only shuffle candidates whose hash might be seen;
@@ -281,32 +282,28 @@ def blocklist_gated_discovery(expand_fn, blocklist: DataFrame):
 def host_bucketed_topk(
     candidates: DataFrame,
     budget_col: str = "max_per_round",
-    n_salts: int = 8,
     key_col: str = "host",
     score_col: str = "score",
 ) -> DataFrame:
-    """Two-phase per-key priority selection (the skew-safe 'host-bucketed
-    min-heap'; ``key_col`` defaults to host — pass "domain" to scope the
-    politeness unit at the registrable domain, the CDN-subdomain case).
-    Phase 1 ranks within (key, salt) and keeps only rows that could still
-    win; phase 2 ranks survivors per key. Output: rank ≤ budget, in the
-    total priority order. ``score_col`` is the priority's middle term —
-    the raw score by default, or an aged score (run_round age_boost)."""
+    """Per-key priority selection (the skew-safe 'host-bucketed min-heap';
+    ``key_col`` defaults to host — pass "domain" to scope the politeness
+    unit at the registrable domain, the CDN-subdomain case). One
+    row_number window per key; its literal rank bound lets Catalyst cut
+    each map task to ``max_budget`` rows per key below the one exchange
+    (partial WindowGroupLimit), so a hot host never pins a task. Output:
+    rank ≤ budget, in the total priority order. ``score_col`` is the
+    priority's middle term — the raw score by default, or an aged score
+    (run_round age_boost)."""
     order = (
         F.col("depth").asc(),
         F.col(score_col).desc(),
         F.col("url").asc(),
     )
     max_budget = 4  # static upper bound of ledger budgets (1 + site_id % 4)
-    w1 = Window.partitionBy(key_col, "salt").orderBy(*order)
-    w2 = Window.partitionBy(key_col).orderBy(*order)
-    return (
-        candidates.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-        .withColumn("salt_rank", F.row_number().over(w1))
-        .filter(F.col("salt_rank") <= max_budget)
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= F.col(budget_col))
-        .drop("salt", "salt_rank")
+    w = Window.partitionBy(key_col).orderBy(*order)
+    rank = F.col("rank")
+    return candidates.withColumn("rank", F.row_number().over(w)).filter(
+        (rank <= max_budget) & (rank <= F.col(budget_col))
     )
 
 
@@ -467,7 +464,6 @@ def run_round(
     spark: SparkSession,
     store: SnapshotStore,
     sf_dir: str,
-    n_salts: int = 8,
     n_partitions: int = 4,
     pages: DataFrame | None = None,
     docs: DataFrame | None = None,
@@ -619,7 +615,7 @@ def run_round(
     # The ranked schedule is a PURE FRONTIER-SIDE plan: frontier rows carry
     # doc_id + the page attributes (FRONTIER_COLS), so the round's
     # scheduling never scans or joins the corpus-scale universe — one
-    # frontier scan, two bounded window stages, 78k-ish rows out. The plan
+    # frontier scan, one bounded window stage, 78k-ish rows out. The plan
     # is NOT eagerly checkpointed: the persisted ``schedule`` table write
     # (inside the concurrent commit) IS its one materialization — every
     # downstream consumer (link expansion, round statistics, fetch/extract,
@@ -637,9 +633,7 @@ def run_round(
             + F.lit(age_boost) * (F.lit(rnd) - F.col("_src_rnd")),
         )
         score_col = "_aged"
-    sched = host_bucketed_topk(
-        eligible, n_salts=n_salts, score_col=score_col
-    ).select(
+    sched = host_bucketed_topk(eligible, score_col=score_col).select(
         F.lit(rnd).alias("round"),
         "url",
         "surt_key",
@@ -809,7 +803,8 @@ def run_round(
         # hash-partitioned on surt_key (no range-sampling pass over a
         # small delta); compaction restores range clustering for the base.
         # Derived: its write IS the materialization of the expand +
-        # seen-anti-join lineage over the written schedule parquet.
+        # seen-anti-join lineage over the written schedule parquet (one
+        # LeftAnti right after a compaction: the empty deltas fold away).
         "frontier_delta": lambda read: discover_new_urls(
             read("schedule").filter("allowed")
             if enforce_robots_paths
@@ -817,14 +812,13 @@ def run_round(
         )
         .select(*FRONTIER_COLS)
         .repartition(n_partitions, "surt_key"),
-        # hash-partitioned, not range: seen keys are uniform 64-bit hashes,
-        # so hash partitioning gives the same clustering/pruning as range
-        # WITHOUT the range partitioner's sampling pass. Second-level
-        # derived table: projects the just-written bounded frontier_delta
-        # parquet, so the discovery lineage executes exactly once.
-        "url_seen_delta": lambda read: read("frontier_delta")
-        .select(seen_key(F.col("url")).alias("seen_key"))
-        .repartition(n_partitions, "seen_key"),
+        # Second-level derived table: projects the just-written bounded
+        # frontier_delta parquet, so the discovery lineage executes once.
+        # No exchange: read_seen scans every delta file and compact_seen
+        # repartitions the base on seen_key.
+        "url_seen_delta": lambda read: read("frontier_delta").select(
+            seen_key(F.col("url")).alias("seen_key")
+        ),
         # round statistics over the fetched slice (reference counting
         # semantics): the written schedule rows carry the page attributes
         # from the universe scan, so the 7 aggregation branches run over

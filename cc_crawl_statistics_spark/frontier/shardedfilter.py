@@ -20,9 +20,9 @@ is a parquet table with one row per shard id::
     (one task owns a shard whole): explode the indices, ``bit_or`` the
     set bits per (shard, word) together with an all-zero word grid so
     every word of every shard exists, and collect each shard's words in
-    index order into one dense array. The driver only counts the keys
-    and writes the ``_FILTER.json`` header last, the same protocol as
-    the store's ``_MANIFEST.json``.
+    index order into one dense array. The key count comes from the
+    caller (the store reads it from parquet footers); the driver writes
+    the ``_FILTER.json`` header last, like the store's ``_MANIFEST.json``.
   * **Probe** (``probe``) is an inner equi-join on shard id with the
     bounded candidate side broadcast: the shard table is only scanned,
     never shuffled or broadcast, and each candidate's bit test is k
@@ -130,15 +130,16 @@ def _write_header(dir_: str, header: dict) -> None:
 def build_sharded_bloom(
     seen: DataFrame,
     out_dir: str,
+    n_keys: int,
     key_col: str = "seen_key",
     bits_per_key: int = 10,
     n_shards: int | None = None,
 ) -> dict:
     """Build the sharded Bloom under ``out_dir`` and return its header.
+    ``n_keys``, the row count of ``seen``, sizes it (no count job here).
     Overwriting the directory removes any earlier header first, so a
     crashed rebuild is invisible until the new header lands."""
     spark = seen.sparkSession
-    n_keys = seen.count()
     if n_shards is None:
         n_shards = default_n_shards(n_keys, bits_per_key)
     per_shard = _padded_per_shard(n_keys, n_shards)

@@ -39,13 +39,14 @@ only columns present in every round.
 Scale notes:
   - the frontier is written ``repartitionByRange(N, "surt_key")`` so each
     partition owns a contiguous SURT range — the next round's scan is
-    partition-aligned and hot SURT prefixes split by raising N (salting
-    handled in scheduler.py);
+    partition-aligned and hot SURT prefixes split by raising N (hot-host
+    ranking handled in scheduler.py);
   - url_seen is APPEND-ONLY: the seed delta is range-partitioned on
-    seen_key, every later round's delta is HASH-partitioned (seen keys
-    are uniform 64-bit hashes, so hash partitioning clusters identically
-    to range without the range partitioner's extra sampling pass). The
-    full set as of round R = compacted base (if any) + subsequent deltas;
+    seen_key; every later round's delta is written with no exchange of
+    its own, as a projection of that round's frontier_delta files (which
+    are hash-partitioned on surt_key), so its keys are not clustered:
+    read_seen scans every delta file anyway. The full set as of round R
+    = compacted base (if any) + subsequent deltas;
   - ``compact_seen`` merges the deltas into one hash-partitioned base
     every K rounds, bounding the file/listing count read_seen unions (at
     thousands of rounds an uncompacted store is a file-listing problem,
@@ -63,6 +64,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 MANIFEST = "_MANIFEST.json"
@@ -167,8 +169,6 @@ class SnapshotStore:
         delta instead of rewriting the 10^10-key set; compaction bounds
         the delta-file count), minus any re-opened keys (reopen_seen)
         not re-added by a later delta."""
-        from pyspark.sql import functions as F
-
         base = self.seen_base_round(upto_rnd)
         paths = []
         if base is not None:
@@ -213,11 +213,15 @@ class SnapshotStore:
         self, spark: SparkSession, from_rnd: int, upto_rnd: int
     ) -> DataFrame:
         """Just the per-round deltas in [from_rnd, upto_rnd] (used as the
-        small anti-join side for Bloom-rejected candidates). Returns an
-        empty seen-key relation when no deltas exist in the range."""
+        small anti-join side for Bloom-rejected candidates). With no
+        deltas in the range: an always-false filter over one row, which
+        the optimizer proves empty and folds out of any anti-join (an
+        RDD-backed empty frame plans as a scan and a broadcast job)."""
         paths = self._round_paths("url_seen_delta", from_rnd, upto_rnd)
         if not paths:
-            return spark.createDataFrame([], "seen_key bigint")
+            return spark.range(1).select(
+                F.col("id").alias("seen_key")
+            ).filter(F.lit(False))
         return self._read(spark, "url_seen_delta", upto_rnd, *paths.values())
 
     def frontier_base_round(self, upto_rnd: int) -> int | None:
@@ -243,8 +247,6 @@ class SnapshotStore:
         so the anti-join side broadcasts. Compaction bounds the chain
         length. Bit-identical to the full-rewrite layout
         (test_frontier.py::test_three_rounds_bit_for_bit)."""
-        from pyspark.sql import functions as F
-
         base = self.frontier_base_round(upto_rnd)
         if base is None:
             raise FileNotFoundError(f"no frontier base ≤ round {upto_rnd}")
@@ -344,6 +346,7 @@ class SnapshotStore:
         build_sharded_bloom(
             self._read(spark, "url_seen_delta", upto_rnd, tmp),
             os.path.join(rdir, PREFILTER),
+            n_keys=self.table_rows(upto_rnd, os.path.basename(tmp)),
             bits_per_key=bloom_bits_per_key,
         )
         if os.path.exists(final):

@@ -6,8 +6,7 @@ sample: the distributed analogue of a seeded reservoir sample. The
 "random" order is ``md5(key)``, reproducible across engines, runs and
 cluster sizes, so train/eval splits are stable under re-execution and the
 same rows are chosen on a laptop and on a 1000-executor cluster. Two-phase
-salted ranking (the same skew-safe shape as the frontier's per-host top-B,
-frontier/scheduler.py): top-K under a total order is distributive, so
+salted ranking: top-K under a total order is distributive, so
 phase 1 keeps K per (stratum, salt) and only ≤ n_salts·K rows per stratum
 reach the final per-stratum window — a 10⁸-document stratum never lands in
 a single window task.
@@ -124,11 +123,10 @@ def domain_mixture_weights(
     apportionment: each group gets floor((1000·isqrt)/total) and the
     deficit units go to the largest division remainders (ties broken by
     group name). The deficit is < 1000 by construction, so only a
-    bounded top-1000-by-remainder set — obtained with the same salted
-    two-phase top-K as the frontier queue, never a global sort of all
-    groups — is ever ranked in one window task; with 10⁸ domains the plan
-    is one groupBy shuffle, two broadcast scalars and a constant-size
-    rank.
+    bounded top-1000-by-remainder set — obtained with a salted two-phase
+    top-K, never a global sort of all groups — is ever ranked in one
+    window task; with 10⁸ domains the plan is one groupBy shuffle, two
+    broadcast scalars and a constant-size rank.
     """
     # per_group / base each feed several branches (totals, deficit,
     # top-ups, the final join); Catalyst does not reuse the exchange

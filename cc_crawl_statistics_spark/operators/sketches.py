@@ -269,10 +269,10 @@ def kmv_sketch(
     better-conditioned alternative).
 
     Scale shape: distinct is ONE map-side-combined shuffle on the hash
-    itself; bottom-k uses the engine's salted two-phase rank (same shape
-    as host_bucketed_topk) — both windows compile to WindowGroupLimit, so
-    each map task ships at most k rows per (group, salt) and no task ever
-    sorts a whole group. Output: ≤ one k-long array per group.
+    itself; bottom-k uses a salted two-phase rank — both windows compile
+    to WindowGroupLimit, so each map task ships at most k rows per
+    (group, salt) and no task ever sorts a whole group. Output: ≤ one
+    k-long array per group.
 
     Ordering note: bottom-k is by SIGNED hash value — the map
     u = h + 2⁶³ to the unsigned estimator domain is order-preserving, so

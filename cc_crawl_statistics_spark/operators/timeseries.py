@@ -235,7 +235,7 @@ def domain_coverage(
     domains (crawlstats.py:919-935, min 100 urls); here the domain
     dimension is unbounded (~10^8 per crawl at 100 TB), so ranking it in
     ONE window partition is a single-task sort. Selection is therefore
-    two-phase salted top-k (the frontier's host_bucketed_topk shape):
+    two-phase salted top-k:
     phase 1 ranks within (crawl, salt) — ≤ k survivors per salt — and
     only the ≤ n_salts·k survivors per crawl see the global-per-crawl
     window. The per-crawl totals come from a plain map-side-combined

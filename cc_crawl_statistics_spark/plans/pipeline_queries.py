@@ -803,7 +803,7 @@ def q_schedule_domain_politeness(spark: SparkSession, sf: str) -> DataFrame:
     """Registrable-domain politeness scope: CDN/subdomain fan-out must
     not multiply one site's fetch budget, so the budget unit can be the
     DOMAIN — the most permissive member host's budget covers all its
-    subdomains. Same salted two-phase top-K, keyed by domain
+    subdomains. Same one-window top-K, keyed by domain
     (host_bucketed_topk(key_col='domain')); per-domain audit with the
     compliance verdict, oracle-exact."""
     from ..frontier.scheduler import (

@@ -448,6 +448,49 @@ def test_prefiltered_round_plan_probes_candidates_once(
     assert plan.count("url_seen_bloom.d") == 1, plan
 
 
+def test_post_compaction_round_plans_drop_removed_jobs(
+    spark, seeded, monkeypatch
+):
+    """The jobs a frontier pass no longer runs stay gone: compact_seen
+    sizes the Bloom from the base's parquet footers (no DataFrame.count);
+    the schedule ranks behind one hash exchange; url_seen_delta is a
+    plain projection (no exchange); and right after a compaction the
+    empty "recent deltas" relation folds away, leaving one LeftAnti and
+    no RDD scan in the frontier_delta plan."""
+    import json
+
+    from cc_crawl_statistics_spark.frontier.shardedfilter import HEADER
+
+    store, _ = seeded
+    DataFrame = type(spark.range(0))  # the concrete (classic) class
+    counted = []
+    count = DataFrame.count
+
+    def counting(self):
+        counted.append(self)
+        # off by one, so a header sized from a Spark count shows below
+        return count(self) + 1
+
+    monkeypatch.setattr(DataFrame, "count", counting)
+    store.compact_seen(spark, 1)
+    assert counted == []
+    with open(os.path.join(store.prefilter_path(1), HEADER)) as f:
+        n_keys = json.load(f)["n_keys"]
+    assert n_keys == store.table_rows(1, "url_seen_base")
+    monkeypatch.setattr(DataFrame, "count", count)
+
+    plans = _record_write_plans(monkeypatch)
+    scheduler.run_round(
+        spark, store, SF_SMOKE, compact_every=0, bloom_min_seen=0
+    )
+    assert plans["schedule"].count("Exchange hashpartitioning") == 1, (
+        plans["schedule"]
+    )
+    assert "Exchange" not in plans["url_seen_delta"], plans["url_seen_delta"]
+    delta = plans["frontier_delta"]
+    assert delta.count("LeftAnti") == 1 and "ExistingRDD" not in delta, delta
+
+
 def test_store_reads_run_no_schema_inference(spark, tmp_path, monkeypatch):
     """Every store read binds a recorded schema: a prefiltered round,
     both compactions and a resume through a fresh handle never call
@@ -502,13 +545,13 @@ def test_fetch_extract_invariant(spark, store):
     }
 
 
-def test_salted_topk_bounds_hot_host(spark):
-    """Skew safety of the two-phase priority queue: a host with 100x the
-    pending URLs still contributes at most n_salts x max_budget rows to the
-    final per-host ranking (phase-1 output bound), and the selected set is
-    the true global top-B for that host."""
-    from pyspark.sql import functions as F
-
+def test_topk_window_group_limit_bounds_hot_host(spark):
+    """Skew safety of the per-host priority queue: the executed plan has
+    a Partial WindowGroupLimit below its only hash exchange, so a host
+    with 100x the pending URLs ships at most the rank bound (the static
+    max budget 4, or a literal budget below it) rows per map partition
+    into the ranking, and the selected set is the true top-B for that
+    host."""
     rows = [("http://hot.example/p%04d" % i, "hot.example", i % 5, (i * 7) % 100)
             for i in range(2000)]
     rows += [("http://cold%d.example/p0" % i, "cold%d.example" % i, 0, 50)
@@ -517,22 +560,21 @@ def test_salted_topk_bounds_hot_host(spark):
         rows, "url string, host string, depth int, score int"
     ).withColumn("max_per_round", F.lit(3))
 
-    n_salts = 8
-    out = scheduler.host_bucketed_topk(cand, n_salts=n_salts).toPandas()
+    top = scheduler.host_bucketed_topk(cand)
+    plan = top._jdf.queryExecution().executedPlan().toString().splitlines()
+    exchanges = [
+        i for i, ln in enumerate(plan) if "Exchange hashpartitioning" in ln
+    ]
+    partial = [
+        i for i, ln in enumerate(plan)
+        if "WindowGroupLimit" in ln and ln.rstrip().endswith(", Partial")
+    ]
+    assert len(exchanges) == 1 and partial, "\n".join(plan)
+    assert partial[0] > exchanges[0], "\n".join(plan)
+
+    out = top.toPandas()
     hot = out[out.host == "hot.example"]
     assert len(hot) == 3  # budget respected
-    # phase-1 bound: survivors per host <= n_salts * static max budget (4)
-    order = (F.col("depth").asc(), F.col("score").desc(), F.col("url").asc())
-    from pyspark.sql import Window
-    w1 = Window.partitionBy("host", "salt").orderBy(*order)
-    survivors = (
-        cand.withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(n_salts)))
-        .withColumn("r", F.row_number().over(w1))
-        .filter(F.col("r") <= 4)
-        .groupBy("host").count().filter(F.col("host") == "hot.example")
-        .collect()[0]["count"]
-    )
-    assert survivors <= n_salts * 4
     # correctness vs a direct global ranking of the hot host
     direct = (
         cand.filter(F.col("host") == "hot.example")

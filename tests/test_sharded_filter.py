@@ -37,7 +37,7 @@ def _table(spark, dir_):  # noqa: F811
 @pytest.fixture(scope="module")
 def bloom_dir(spark, tmp_path_factory):  # noqa: F811
     d = str(tmp_path_factory.mktemp("f") / "bloom.d")
-    header = SH.build_sharded_bloom(_seen_df(spark), d, n_shards=8)
+    header = SH.build_sharded_bloom(_seen_df(spark), d, N_KEYS, n_shards=8)
     return d, header
 
 
@@ -76,8 +76,10 @@ def test_sharded_build_deterministic(spark, tmp_path):  # noqa: F811
     compaction re-run after a crash rest on."""
     seen = _seen_df(spark, 8000)
     d1, d2 = str(tmp_path / "a.d"), str(tmp_path / "b.d")
-    h1 = SH.build_sharded_bloom(seen, d1, n_shards=4)
-    h2 = SH.build_sharded_bloom(seen.repartition(3), d2, n_shards=4)
+    h1 = SH.build_sharded_bloom(seen, d1, 8000, n_shards=4)
+    h2 = SH.build_sharded_bloom(
+        seen.repartition(3), d2, 8000, n_shards=4
+    )
     assert h1 == h2
     assert _table(spark, d1) == _table(spark, d2)
 
@@ -89,7 +91,7 @@ def test_every_shard_id_has_a_row(spark, tmp_path):  # noqa: F811
     there are definitely absent."""
     d = str(tmp_path / "sparse.d")
     seen = _seen_df(spark, 10)
-    header = SH.build_sharded_bloom(seen, d, n_shards=64)
+    header = SH.build_sharded_bloom(seen, d, 10, n_shards=64)
     table = _table(spark, d)
     assert [s for s, _ in table] == list(range(64))
     assert sum(1 for _, w in table if any(w)) <= 10

@@ -2,8 +2,9 @@
 actually splits a Zipf-hot partition at runtime, with unchanged results.
 
 At 100 TB the host/domain dimensions are Zipf-distributed; the engine's
-posture (SURVEY §4) is salting for the *known* hot keys (frontier's
-host-bucketed top-k) plus AQE skew-join for the *unknown* ones. This
+posture (SURVEY §4) is a map-side cut for the *known* hot keys (the
+frontier's host-bucketed top-k: a partial WindowGroupLimit below its
+shuffle) plus AQE skew-join for the *unknown* ones. This
 test pins the second half: a key carrying half the left relation is
 detected from runtime shuffle stats and split — SortMergeJoin(skew=true)
 in the final adaptive plan — while the join result stays exact.

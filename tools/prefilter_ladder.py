@@ -57,7 +57,7 @@ def main() -> None:
 
     d = os.path.join(scratch, "bloom.d")
     t0 = time.time()
-    header = SH.build_sharded_bloom(seen, d)
+    header = SH.build_sharded_bloom(seen, d, n_keys)
     build_sec = time.time() - t0
     sizes = [
         os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
