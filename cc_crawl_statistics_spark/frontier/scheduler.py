@@ -31,8 +31,9 @@ Scale design (10^10-URL frontier, 1000 executors):
     frontier size;
   - url_seen is hash-keyed (xxhash64 of the canonical SURT URL — murmur/xx
     family per north_star; 64-bit keyspace, collision P < 3·10^-3 at 10^10
-    keys even before partition scoping), clustered on seen_key by the seed
-    delta's range partitioning and compaction's hash partitioning; the exact
+    keys even before partition scoping), clustered on seen_key only by
+    compaction's hash partitioning (each round's delta, the seed's
+    included, is a plain projection of its written frontier rows); the exact
     anti-join is preceded at scale by Spark's runtime Bloom-filter join
     (spark.sql.optimizer.runtime.bloomFilter.enabled) so frontier partitions
     only shuffle candidates whose hash might be seen;
@@ -533,36 +534,34 @@ def run_round(
     if latest is None:
         if pages is None:
             pages = pages_df(spark, sf_dir)
-        universe = url_universe(pages).cache()
-        n_docs = universe.count()  # scalar dimension size, no url-level collect
-        ledger = host_ledger(universe)
-        frontier = seed_frontier(universe)
-        seen_delta = frontier.select(seen_key(F.col("url")).alias("seen_key"))
+        # the seed is one commit like every round's: the universe is its
+        # one eager write; the frontier, the ledger and the seen delta
+        # derive from the written universe parquet (and the delta from the
+        # written frontier), so no lineage is cached or counted
         store.commit(
             0,
             {
-                "frontier": frontier.repartitionByRange(
-                    n_partitions, "surt_key"
-                ),
-                "url_seen_delta": seen_delta.repartitionByRange(
-                    n_partitions, "seen_key"
-                ),
-                "host_ledger": ledger,
                 # the URL universe / link graph is static corpus state:
                 # persisted ONCE at seed time, read (never recomputed or
                 # reshuffled) by every subsequent round
-                "universe": universe.repartitionByRange(
+                "universe": url_universe(pages).repartitionByRange(
                     n_partitions, "doc_id"
+                ),
+                "frontier": lambda read: seed_frontier(
+                    read("universe")
+                ).repartitionByRange(n_partitions, "surt_key"),
+                "host_ledger": lambda read: host_ledger(read("universe")),
+                "url_seen_delta": lambda read: read("frontier").select(
+                    seen_key(F.col("url")).alias("seen_key")
                 ),
             },
             lambda read: {
                 "round": 0,
                 "n_seeded": store.table_rows(0, "frontier"),
-                "n_docs": n_docs,
+                "n_docs": store.table_rows(0, "universe"),
                 "n_seen": store.table_rows(0, "url_seen_delta"),
             },
         )
-        universe.unpersist()
         latest = 0
 
     rnd = latest + 1
@@ -745,6 +744,12 @@ def run_round(
     # periodically rewrites one materialized base to bound the chain (the
     # Iceberg merge-on-read delete + rewrite_data_files pattern).
 
+    def fetchable(read) -> DataFrame:
+        """The written schedule rows a fetcher claims: all of them, or
+        only the robots-allowed ones under enforce_robots_paths."""
+        rows = read("schedule")
+        return rows.filter("allowed") if enforce_robots_paths else rows
+
     def metrics_from_snapshot(read) -> dict:
         # exact row counts from the written files' parquet footers —
         # driver-side metadata reads, zero Spark jobs (the Iceberg
@@ -805,11 +810,7 @@ def run_round(
         # Derived: its write IS the materialization of the expand +
         # seen-anti-join lineage over the written schedule parquet (one
         # LeftAnti right after a compaction: the empty deltas fold away).
-        "frontier_delta": lambda read: discover_new_urls(
-            read("schedule").filter("allowed")
-            if enforce_robots_paths
-            else read("schedule")
-        )
+        "frontier_delta": lambda read: discover_new_urls(fetchable(read))
         .select(*FRONTIER_COLS)
         .repartition(n_partitions, "surt_key"),
         # Second-level derived table: projects the just-written bounded
@@ -824,20 +825,11 @@ def run_round(
         # from the universe scan, so the 7 aggregation branches run over
         # budget-bounded parquet — no corpus rescan per round.
         "round_stats": lambda read: round_statistics(
-            (
-                read("schedule").filter("allowed")
-                if enforce_robots_paths
-                else read("schedule")
-            ).select("url", "host", *ATTR_COLS)
+            fetchable(read).select("url", "host", *ATTR_COLS)
         ),
     }
     if docs is not None:
-        tables["fetched"] = lambda read: fetch_extract(
-            read("schedule").filter("allowed")
-            if enforce_robots_paths
-            else read("schedule"),
-            docs,
-        )
+        tables["fetched"] = lambda read: fetch_extract(fetchable(read), docs)
     out = store.commit(rnd, tables, metrics_from_snapshot)
     if compact_every and rnd % compact_every == 0:
         store.compact_seen(spark, rnd, n_partitions)

@@ -41,12 +41,12 @@ Scale notes:
     partition owns a contiguous SURT range — the next round's scan is
     partition-aligned and hot SURT prefixes split by raising N (hot-host
     ranking handled in scheduler.py);
-  - url_seen is APPEND-ONLY: the seed delta is range-partitioned on
-    seen_key; every later round's delta is written with no exchange of
-    its own, as a projection of that round's frontier_delta files (which
-    are hash-partitioned on surt_key), so its keys are not clustered:
-    read_seen scans every delta file anyway. The full set as of round R
-    = compacted base (if any) + subsequent deltas;
+  - url_seen is APPEND-ONLY: every round's delta, the seed's included, is
+    written with no exchange of its own, as a projection of the frontier
+    rows that round just wrote (the seed frontier, or a frontier_delta),
+    so its keys are not clustered: read_seen scans every delta file
+    anyway. The full set as of round R = compacted base (if any) +
+    subsequent deltas;
   - ``compact_seen`` merges the deltas into one hash-partitioned base
     every K rounds, bounding the file/listing count read_seen unions (at
     thousands of rounds an uncompacted store is a file-listing problem,
@@ -434,18 +434,14 @@ class SnapshotStore:
         re-executing the round's whole lineage.
 
         A table value may be a DataFrame or a CALLABLE ``read -> DataFrame``
-        evaluated after the tables it reads are on disk (``read``
-        resolves already-written tables of this round). Callables express
-        derived tables (e.g. the seen-key projection of the discovery
-        delta): the heavy lineage executes exactly once, inside the write
-        of the table it derives from, and the derived write re-reads that
-        bounded parquet instead of forcing an eager checkpoint upstream —
-        so the expensive write overlaps the other concurrent writes
-        instead of serializing before them. Derivation chains any depth:
-        callables are resolved in waves — each wave evaluates every
-        remaining callable whose inputs exist (``read`` of an unwritten
-        table defers the callable to a later wave) and writes the wave
-        concurrently."""
+        that derives the table from tables listed BEFORE it in ``tables``
+        (the seen-key projection of the discovery delta, say): ``read``
+        waits for that table's write and binds the schema just written, so
+        the heavy lineage executes exactly once, inside the write of the
+        table it derives from, and no eager checkpoint is forced upstream.
+        Dependency order is the listing order; a read of a table listed
+        later, or of no table of the commit, raises ``ValueError`` and no
+        manifest is written."""
         rdir = self._round_dir(rnd)
         if os.path.exists(rdir):  # crashed, uncommitted attempt: redo
             if os.path.exists(os.path.join(rdir, MANIFEST)):
@@ -456,66 +452,52 @@ class SnapshotStore:
         from concurrent.futures import ThreadPoolExecutor
 
         self.last_commit_timings = {}
+        spark = SparkSession.getActiveSession()
+        names = list(tables)
+        # position i → the future of the write of names[i] (its schema)
+        futures = []
 
-        # The table writes are independent jobs over already-materialized
-        # inputs (checkpointed/persisted upstream), so each wave submits
-        # them CONCURRENTLY, one driver thread per table: py4j releases the
-        # GIL during JVM work and Spark schedules the jobs side by side,
+        def reader(upto: int):
+            """``read`` for a table at position ``upto`` (or, past the end,
+            for the metrics): only tables listed before it."""
+            def read(name):
+                if name not in names[:upto]:
+                    raise ValueError(
+                        f"round {rnd}: {name!r} is not a table listed "
+                        f"before the reader (readable: {names[:upto]})"
+                    )
+                schema = futures[names.index(name)].result()
+                return spark.read.schema(schema).parquet(
+                    os.path.join(rdir, name)
+                )
+
+            return read
+
+        # One writer thread per table, all submitted at once: py4j releases
+        # the GIL during JVM work and Spark schedules the jobs side by side,
         # overlapping the per-job fixed latency (driver scheduling + output
-        # commit) that otherwise serializes — measured as the largest slice
-        # of the round's constant cost (BENCH.md design decision
-        # "concurrent commit writes"). A failed write raises before the
-        # manifest is written, so crash semantics are unchanged (no
-        # manifest = round never happened).
-        written: dict[str, StructType] = {}
-
-        def _write(item):
-            name, df = item
-            path = os.path.join(rdir, name)
+        # commit) that otherwise serializes (BENCH.md design decision
+        # "concurrent commit writes"). A derived table builds its plan in
+        # its own thread as soon as its inputs are on disk. A failed write
+        # raises before the manifest is written, so crash semantics are
+        # unchanged (no manifest = round never happened).
+        def write(i: int) -> StructType:
+            name, df = names[i], tables[names[i]]
+            if callable(df):
+                df = df(reader(i))
             t0 = _time.time()
-            df.write.mode("overwrite").parquet(path)
+            df.write.mode("overwrite").parquet(os.path.join(rdir, name))
             self.last_commit_timings[f"write_{name}"] = round(
                 _time.time() - t0, 3
             )
-            written[name] = df.schema
+            return df.schema
 
-        def _write_wave(items):
-            with ThreadPoolExecutor(max_workers=max(len(items), 1)) as pool:
-                list(pool.map(_write, items))
-
-        class _NotYetWritten(Exception):
-            pass
-
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-
-        def _read(name):
-            # a derived read binds the schema of the DataFrame just
-            # written, so a round that widens a table reads its own columns
-            if name not in written:
-                raise _NotYetWritten(name)
-            return spark.read.schema(written[name]).parquet(
-                os.path.join(rdir, name)
-            )
-
-        _write_wave([(n, df) for n, df in tables.items() if not callable(df)])
-        remaining = {n: fn for n, fn in tables.items() if callable(fn)}
-        while remaining:
-            wave = []
-            for n, fn in list(remaining.items()):
-                try:
-                    wave.append((n, fn(_read)))
-                except _NotYetWritten:
-                    continue
-            if not wave:
-                raise ValueError(
-                    "circular derived-table dependencies: "
-                    f"{sorted(remaining)}"
-                )
-            _write_wave(wave)
-            for n, _ in wave:
-                del remaining[n]
+        with ThreadPoolExecutor(max_workers=max(len(names), 1)) as pool:
+            # appended in listing order before the next submit, so a
+            # writer's reads only index futures that already exist
+            for i in range(len(names)):
+                futures.append(pool.submit(write, i))
+        written = {n: f.result() for n, f in zip(names, futures)}
         lineage = {
             name: sorted(
                 f
@@ -525,7 +507,7 @@ class SnapshotStore:
             for name in tables
         }
         if callable(metrics):
-            metrics = metrics(_read)
+            metrics = metrics(reader(len(names)))
         tmp = os.path.join(rdir, MANIFEST + ".tmp")
         with open(tmp, "w") as f:
             json.dump(

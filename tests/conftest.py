@@ -1,12 +1,14 @@
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, whichever copy of the repository runs the suite
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cc_crawl_statistics_spark.session import get_spark  # noqa: E402
 from cc_crawl_statistics_spark.sources.tables import TABLES  # noqa: E402
@@ -22,8 +24,6 @@ def spark():
     # 8 local threads: the fixtures are tiny, so beyond ~8 the per-test
     # fixed costs dominate; shuffle_partitions stays pinned at 8 so plans
     # (and any partitioning-sensitive goldens) are unchanged
-    import os
-
     cores = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
     s = get_spark(app_name="tests", cores=cores, shuffle_partitions=8)
     yield s

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -585,39 +586,82 @@ def test_topk_window_group_limit_bounds_hot_host(spark):
 
 
 def test_commit_resolves_multi_level_derived_tables(spark, tmp_path):
-    """state.commit derived-table waves: a callable chain a -> b -> c
-    resolves across waves regardless of dict order, each level reads the
-    previous level's written parquet, and a circular chain raises instead
-    of hanging."""
-    store = SnapshotStore(str(tmp_path / "s"))
-    base = spark.range(10).toDF("x")
-    store.commit(
-        0,
-        {
-            # insertion order deliberately reversed vs dependency order
-            "c": lambda read: read("b").withColumn("x", F.col("x") + 1),
-            "b": lambda read: read("a").withColumn("x", F.col("x") + 1),
-            "a": base,
-        },
-        {"round": 0},
-    )
-    a = {r.x for r in store.read(spark, 0, "a").collect()}
-    b = {r.x for r in store.read(spark, 0, "b").collect()}
-    c = {r.x for r in store.read(spark, 0, "c").collect()}
-    assert a == set(range(10))
-    assert b == {x + 1 for x in a}
-    assert c == {x + 2 for x in a}
+    """state.commit derived tables: a chain listed in dependency order
+    resolves, each level reading the previous level's written parquet,
+    with more writer threads than cores switching often. A read of a
+    table listed later or of no table of the commit, and a callable that
+    raises, fail the commit before the manifest; a retry of the same
+    round then commits."""
+    def plus_one(prev):
+        return lambda read: read(prev).withColumn("x", F.col("x") + 1)
 
-    store2 = SnapshotStore(str(tmp_path / "s2"))
-    with pytest.raises(ValueError, match="circular"):
-        store2.commit(
-            0,
-            {
-                "p": lambda read: read("q"),
-                "q": lambda read: read("p"),
-            },
-            {"round": 0},
-        )
+    base = spark.range(10).toDF("x")
+    chain = {"t0": base}
+    for i in range(1, 8):
+        chain[f"t{i}"] = plus_one(f"t{i - 1}")
+    store = SnapshotStore(str(tmp_path / "s"))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        store.commit(0, chain, {"round": 0})
+    finally:
+        sys.setswitchinterval(interval)
+    for i in range(8):
+        got = {r.x for r in store.read(spark, 0, f"t{i}").collect()}
+        assert got == set(range(i, 10 + i)), (i, got)
+
+    def boom(read):
+        raise RuntimeError("plan failed")
+
+    bad = SnapshotStore(str(tmp_path / "bad"))
+    for tables, err in (
+        # b reads c, which is listed after it
+        ({"a": base, "b": lambda read: read("c"), "c": lambda read: read("a")},
+         ValueError),
+        ({"a": base, "b": lambda read: read("nope")}, ValueError),
+        ({"a": base, "b": boom}, RuntimeError),
+    ):
+        with pytest.raises(err):
+            bad.commit(1, tables, {"round": 1})
+        assert not os.path.exists(os.path.join(bad._round_dir(1), MANIFEST))
+        assert bad.latest_round() is None
+    bad.commit(1, chain, {"round": 1})
+    assert bad.latest_round() == 1
+    assert {r.x for r in bad.read(spark, 1, "t7").collect()} == set(
+        range(7, 17)
+    )
+
+
+def test_seed_round_is_one_commit(spark, store, monkeypatch):
+    """The seed round goes through the same commit path as every round:
+    it caches, persists and counts no DataFrame, records n_docs from the
+    written universe's footers, and writes its url_seen_delta as a plain
+    projection of the written frontier (no exchange)."""
+    DataFrame = type(spark.range(0))  # the concrete (classic) class
+    calls = []
+    for name in ("count", "cache", "persist"):
+        def spy(self, *a, _f=getattr(DataFrame, name), _n=name, **k):
+            calls.append(_n)
+            return _f(self, *a, **k)
+
+        monkeypatch.setattr(DataFrame, name, spy)
+    plans = _record_write_plans(monkeypatch)
+    commit = store.commit
+    at_seed = {}
+
+    def seed_spy(rnd, *a, **k):
+        out = commit(rnd, *a, **k)
+        if rnd == 0:
+            at_seed.update(calls=list(calls), plans=dict(plans))
+        return out
+
+    monkeypatch.setattr(store, "commit", seed_spy)
+    scheduler.run_round(spark, store, SF_SMOKE)
+    assert at_seed["calls"] == []
+    n_docs = store.manifest(0)["metrics"]["n_docs"]
+    assert n_docs == N_DOCS == store.table_rows(0, "universe")
+    delta = at_seed["plans"]["url_seen_delta"]
+    assert "Exchange" not in delta, delta
 
 
 def test_rediscovery_after_reopen_survives_old_retire(spark, tmp_path):
